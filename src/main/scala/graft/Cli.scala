@@ -43,13 +43,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(master = sys.env.get("SPARK_GRAFT_MASTER"))
     run(spark, args)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"Time Elapsed :  $secs%.3f")

@@ -1,0 +1,51 @@
+package graft
+
+import org.apache.spark.scheduler._
+
+/** Dev drill-down for named entries: each runs 3 reps through the noop
+  * sink Bench times, and every Spark job a rep launches is printed with
+  * its start offset, wall time and stage count — the Spark-UI jobs page
+  * for a headless box. `--explain` adds the formatted plan.
+  *
+  * Usage: runMain graft.Probe <sfDir> [--explain] <entry>...
+  */
+object Probe {
+  def main(args: Array[String]): Unit = {
+    val (flags, rest) = args.toSeq.partition(_.startsWith("--"))
+    if (rest.size < 2) {
+      System.err.println("usage: graft.Probe <sfDir> [--explain] <entry>...")
+      sys.exit(2)
+    }
+    val sfDir = rest.head
+    val names = rest.tail
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
+    val spark = GraftSession()
+    Tables.names.foreach(t => Bench.warm(t)(Tables(spark, sfDir, t).count()))
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]
+    @volatile var t0 = System.nanoTime()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.put(j.jobId, (System.nanoTime(), j.stageInfos.size))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(jobs.remove(j.jobId)).foreach { case (s, stages) =>
+          println(f"  JOB ${j.jobId}%3d  +${(s - t0) / 1e9}%6.2f  " +
+            f"${(System.nanoTime() - s) / 1e9}%6.3f s  stages=$stages")
+        }
+    })
+    names.foreach { n =>
+      val fn = SparkEntry.queries(n)
+      val times = (1 to 3).map { r =>
+        println(s"== $n rep $r ==")
+        t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(300) // let job-end events drain before the next banner
+        secs
+      }
+      println(f"PROBE $n%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
+      if (flags.contains("--explain")) fn(spark, sfDir).explain("formatted")
+    }
+    spark.stop()
+  }
+}

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Off-gate scale experiment: time the dedup strategies against a larger
   * corpus (default: the 50k-doc dup-heavy replica; rebuild it with
   * `python3 tools/make_scale_corpus.py` — see SURVEY.md §8 scale-smoke
@@ -10,12 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Seq("q20_exact_dedup", "dedup_keep_min", "q21_minhash_lsh",
       "dedup_simhash", "dedup_simhash_w", "q23_ngram_jaccard",
       "dedup_cluster_best", "q70_dup_spans", "q88_epoch_shuffle",

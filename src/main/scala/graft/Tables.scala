@@ -30,17 +30,13 @@ object Tables {
   private val resolved = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]
 
-  private val cacheOff = sys.env.contains("SPARK_GRAFT_NO_TABLE_CACHE")
-
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (cacheOff) normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
-    else
-      // stopped-session purge on the miss path — the shared discipline
-      // (rationale and CHM-contract caveat) lives in [[SessionCaches]]
-      SessionCaches.getOrBuild(resolved, (spark, sfDir, name),
-        (k: (SparkSession, String, String)) => k._1) {
-        normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
-      }
+    // stopped-session purge on the miss path — the shared discipline
+    // (rationale and CHM-contract caveat) lives in [[SessionCaches]]
+    SessionCaches.getOrBuild(resolved, (spark, sfDir, name),
+      (k: (SparkSession, String, String)) => k._1) {
+      normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
+    }
 
   /** Drop cached resolutions (all of a session's, or one dir's). */
   def evict(spark: SparkSession, sfDir: String = null): Unit = {
@@ -79,8 +75,8 @@ object Tables {
 
   /** Session config required to read all TESTDATA tables (nanos-timestamp
     * handling for `events`; micros-NTZ read as instants so watermarks and
-    * epoch functions type-check). Apply on every SparkSession this engine
-    * uses, alongside spark.sql.session.timeZone=UTC.
+    * epoch functions type-check). [[GraftSession]] applies it, alongside
+    * spark.sql.session.timeZone=UTC, on every session this engine builds.
     */
   val requiredConf: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -42,7 +42,7 @@ object Multimodal {
   // ImageIO's default stream cache is DISK-backed: every
   // ImageIO.read/write and create*Stream call round-trips a temp FILE
   // unless useCache is off — a per-row disk create/write/delete inside
-  // the decode/encode kernels (round 13; measured with MmProbe). The
+  // the decode/encode kernels (round 13; OPTIMIZATION_r13.md item 6). The
   // payloads here are small frames decoded in memory; the memory cache
   // is strictly better at any scale (executors decode bounded batches,
   // never whole files).

@@ -150,11 +150,11 @@ object DedupQueries {
     * TESTDATA regeneration — so the exact design ships; a deployment
     * that prefers the speed can reassemble the budget arm from
     * [[lshBandCandidates]] + a df-capped [[bucketPairs]] in ten lines
-    * (DebugPairs keeps the measured recipe). Full q23 join for
-    * reference: 56–68 s on the same corpus; q277 end-to-end 63.5 s →
-    * ~30 s cold (including the session ShingleCache build) / ~2.9 s
-    * cache-warm, cluster histogram byte-identical to the exact
-    * baseline's.
+    * (recipe and numbers: OPTIMIZATION_r13.md, "Retired dev probes").
+    * Full q23 join for reference: 56–68 s on the same corpus; q277
+    * end-to-end 63.5 s → ~30 s cold (including the session ShingleCache
+    * build) / ~2.9 s cache-warm, cluster histogram byte-identical to the
+    * exact baseline's.
     *
     * DedupSpec pins collapsed == full-graph components on a planted
     * dup-family corpus AND edge-set equality with q23's pair list on
@@ -173,7 +173,7 @@ object DedupQueries {
     * fallback, so exact remains the only shipped path; a corpus whose
     * post-collapse clusters are radically larger than its exact-dup
     * cliques is the signal to reassemble the budget arm (recipe and
-    * measurement harness: [[graft.DebugPairs]]).
+    * measurements: OPTIMIZATION_r13.md, "Retired dev probes").
     */
   private[graft] def connectivityPairGraph(s: SparkSession, d: String)
     : DataFrame = {
@@ -1551,8 +1551,8 @@ private[graft] object ShingleCache {
   * components over it equal components over q23's full exact pair
   * list on EVERY corpus, not just the oracle ones (see the builder's
   * scaladoc for the proof sketch; DedupSpec pins byte-identity). The
-  * superseded approximate budget+LSH recipe stays runnable for A/B
-  * measurement in [[graft.DebugPairs]].
+  * superseded approximate budget+LSH recipe and its A/B numbers are
+  * recorded in OPTIMIZATION_r13.md, "Retired dev probes".
   *
   * The pair LIST consumers (q21/q23/q257) deliberately do NOT read
   * this cache: they ARE the pair producers whose per-pair scores are

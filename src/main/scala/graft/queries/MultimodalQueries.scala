@@ -229,11 +229,12 @@ object MultimodalQueries {
 /** Session-pinned synthetic asset table — the shared input of the seven
   * `mm_*` synthetic entries. The cost of `syntheticAssets` is the
   * per-row ENCODE UDFs (ImageIO PNG write / WAV frame pack / per-frame
-  * GIF write), measured ~1.5 s/pass at sf0.1 (MmProbe) against a 9.5 MB
-  * pinned footprint; five of the seven consumers read the bytes column
-  * (decode_stats, frame_sample, image_neardup, scene_cuts,
-  * audio_segments — the two remaining near-dup entries prune to
-  * asset_id and re-synthesize their own payload variants), so the
+  * GIF write), measured ~1.5 s/pass at sf0.1 (OPTIMIZATION_r13.md,
+  * "Retired dev probes") against a 9.5 MB pinned footprint; five of
+  * the seven consumers read the bytes column (decode_stats,
+  * frame_sample, image_neardup, scene_cuts, audio_segments — the two
+  * remaining near-dup entries prune to asset_id and re-synthesize
+  * their own payload variants), so the
   * bench's 2-runs-per-entry sweep makes ≥10 encode passes without the
   * pin — beyond the measured ~8-pass threshold (graft-build-discipline).
   *

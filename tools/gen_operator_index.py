@@ -79,7 +79,7 @@ def main():
         "# Operator index",
         "",
         "Every driver-checked entry in `SparkEntry.queries` — the name you",
-        "pass to `graft.Verify`/`graft.PerfProbe`/`SPARK_GRAFT_BENCH_ONLY`",
+        "pass to `graft.Verify`/`graft.Probe`/`SPARK_GRAFT_BENCH_ONLY`",
         "— with the file defining it and how its correctness is pinned:",
         "",
         f"- **oracle** ({n_oracle} entries): hash-matched against DuckDB",
