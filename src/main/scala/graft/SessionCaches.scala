@@ -2,46 +2,63 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared miss-path lifecycle discipline for the engine's
-  * (SparkSession, …)-keyed caches ([[Tables]], TokenCache,
-  * ShingleCache, PairCache, TradeEdgeCache, BasketCache,
-  * PricePercentileCache, RankQuantileCache, PsiGridCache,
-  * ConformalFitCache, AssetCache, LloydFitCache).
+/** A (session, dir)-keyed cache — the one implementation every
+  * session-scoped cache in the engine is an instance of; grep
+  * `new SessionCache` for the list. `K` refines the key within a
+  * (session, dir): a table name, a flag, model parameters, or `Unit`.
   *
-  * A long-lived JVM that creates and stops sessions — or the shared
-  * test JVM, which accumulates one entry per temp dir per suite — must
-  * not pin dead sessions' plans (or, for the persisted-DataFrame
-  * caches, dead entries whose storage blocks already died with their
-  * context) forever. The purge runs on the MISS path only (never
-  * per-hit, the hot path stays a single CHM get) and BEFORE
-  * `computeIfAbsent`, outside its mapping function: the CHM contract
-  * forbids the mapping function from mutating the map (a removal
-  * landing in the bin being computed can corrupt it).
+  * Lifecycle: an entry lives until [[evict]] drops its (session, dir),
+  * which calls `release` on each dropped value (`unpersist` for the
+  * persisted-DataFrame caches, a no-op for driver metadata). Dirs are
+  * assumed immutable for a session's lifetime; a caller that rewrites
+  * one in place must evict it. A long-lived service touching many dirs
+  * must evict finished ones, or pinned blocks accumulate.
   *
-  * Stopped-session entries are removed WITHOUT unpersisting: a stopped
-  * SparkContext has already torn down its block manager, so the
-  * pinned blocks are gone and `unpersist()` on the dead plan would at
-  * best no-op and at worst throw into the purge loop. Live-session
-  * eviction (dir rewrite, suite cleanup) stays each cache's own
-  * `evict`/`clear`, which DO unpersist.
+  * Stopped sessions: a long-lived JVM that creates and stops sessions —
+  * or the shared test JVM — must not pin dead sessions' entries
+  * forever, so a miss first drops every entry whose session is stopped
+  * (see [[SessionCaches.getOrBuildWhere]]). Those are dropped WITHOUT
+  * `release`: a stopped SparkContext has already torn down its block
+  * manager, so `unpersist()` on the dead plan would at best no-op and
+  * at worst throw into the purge loop.
+  *
+  * Two instances never share a map, so one cache's build may read
+  * another cache; a build must not read its own cache
+  * (`computeIfAbsent` throws "Recursive update").
   */
+final class SessionCache[K, V](release: V => Unit) {
+
+  private val map = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, K), V]
+
+  def apply(s: SparkSession, d: String, k: K)(build: => V): V =
+    SessionCaches.getOrBuildWhere(map, (s, d, k),
+      (key: (SparkSession, String, K)) => key._1.sparkContext.isStopped)(
+      build)
+
+  /** Drop every entry of (`s`, `d`), releasing each one once. */
+  def evict(s: SparkSession, d: String): Unit = {
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val (ks, kd, _) = e.getKey
+      if (ks == s && kd == d && map.remove(e.getKey, e.getValue))
+        release(e.getValue)
+    }
+  }
+}
+
 private[graft] object SessionCaches {
 
-  /** Cache lookup with the stopped-session purge on the miss path.
+  /** Cache lookup with the stopped-session purge on the miss path —
+    * the seam SessionCachesSpec pins the purge through, with an
+    * explicit deadness predicate (a JVM holds ONE SparkContext, so a
+    * live-plus-stopped session pair cannot exist in the test JVM).
     *
-    * @param session extracts the owning session from a key (the caches
-    *                key by `(SparkSession, …)` tuples of varying arity)
-    */
-  def getOrBuild[K, V](
-      cache: java.util.concurrent.ConcurrentHashMap[K, V],
-      key: K, session: K => SparkSession)(build: => V): V =
-    getOrBuildWhere(cache, key,
-      (k: K) => session(k).sparkContext.isStopped)(build)
-
-  /** [[getOrBuild]] with an explicit deadness predicate — the seam
-    * SessionCachesSpec pins the purge through (a JVM holds ONE
-    * SparkContext, so a live-plus-stopped session pair cannot exist in
-    * the test JVM to drive the real predicate).
+    * The purge runs on the MISS path only (the hit path stays a single
+    * `get`) and BEFORE `computeIfAbsent`, outside its mapping function:
+    * the CHM contract forbids the mapping function from mutating the
+    * map (a removal landing in the bin being computed can corrupt it).
     */
   private[graft] def getOrBuildWhere[K, V](
       cache: java.util.concurrent.ConcurrentHashMap[K, V],

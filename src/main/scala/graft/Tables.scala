@@ -25,27 +25,14 @@ object Tables {
     * the analyzed relation (logical plan, NOT data — nothing is
     * persisted/pinned), keyed per session so separate test sessions
     * never share. TESTDATA dirs are immutable for a session's lifetime;
-    * a test that rewrites a table dir in place must call [[evict]].
+    * a test that rewrites a table dir in place must evict it.
     */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
+  private[graft] val resolved = new SessionCache[String, DataFrame](_ => ())
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    // stopped-session purge on the miss path — the shared discipline
-    // (rationale and CHM-contract caveat) lives in [[SessionCaches]]
-    SessionCaches.getOrBuild(resolved, (spark, sfDir, name),
-      (k: (SparkSession, String, String)) => k._1) {
+    resolved(spark, sfDir, name) {
       normalize(spark.read.parquet(s"$sfDir/$name.parquet"))
     }
-
-  /** Drop cached resolutions (all of a session's, or one dir's). */
-  def evict(spark: SparkSession, sfDir: String = null): Unit = {
-    val it = resolved.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._1 == spark && (sfDir == null || k._2 == sfDir)) it.remove()
-    }
-  }
 
   /** Timestamp normalization across TESTDATA generations. Older drops
     * wrote events.ts as parquet TIMESTAMP(NANOS) (vectorized reader

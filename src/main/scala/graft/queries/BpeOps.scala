@@ -219,22 +219,19 @@ object BpeOps {
   }
 
   /** Session-scoped merge-table cache so the train+encode query pair
-    * doesn't train twice (the ShingleCache discipline, with the same
-    * evict/clear lifecycle hooks; entries are KB-scale strings).
+    * doesn't train twice (entries are KB-scale strings). Lifecycle:
+    * [[graft.SessionCache]].
     */
   private[graft] object MergeCache {
-    private val cache = mutable.Map[(SparkSession, String), Seq[(String, String)]]()
+    private[graft] val cache =
+      new graft.SessionCache[Unit, Seq[(String, String)]](_ => ())
     def merges(s: SparkSession, d: String): Seq[(String, String)] =
-      cache.synchronized {
+      cache(s, d, ()) {
         // trainLocal: identical merge table (BpeSpec pins == train),
         // one histogram collect instead of one cluster job per merge
-        cache.getOrElseUpdate((s, d),
-          trainLocal(Tables(s, d, "documents")).orderBy("rank")
-            .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
+        trainLocal(Tables(s, d, "documents")).orderBy("rank")
+          .collect().map(r => (r.getString(1), r.getString(2))).toSeq
       }
-    def evict(s: SparkSession, d: String): Unit =
-      cache.synchronized { cache.remove((s, d)) }
-    def clear(): Unit = cache.synchronized { cache.clear() }
   }
 
   /** Per-language tokenizer FERTILITY audit [Rust et al., ACL'21's

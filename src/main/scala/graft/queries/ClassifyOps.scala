@@ -873,17 +873,15 @@ object ClassifyOps {
   * REGRESSED q264 1.3 → 2.5 s at sf0.1 (a vectorized parquet scan +
   * explode outruns the row-based deserializing cache read at low reuse
   * counts), so nbScores tokenizes inline. MEMORY_AND_DISK, built with
-  * one narrow scan + generate, no shuffle. Lifecycle/staleness contract
-  * identical to ShingleCache: the `documents` table under a dataset dir
-  * is assumed immutable for the session; evict to invalidate, and a
-  * long-lived service touching many datasets MUST evict finished ones.
+  * one narrow scan + generate, no shuffle. Lifecycle:
+  * [[graft.SessionCache]].
   */
 private[graft] object TokenCache {
 
   import org.apache.spark.storage.StorageLevel
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private[graft] val cache =
+    new graft.SessionCache[Unit, DataFrame](_.unpersist())
 
   /** The shared derivation (also the unpinned seam for explicit-frame
     * specs): whitespace split, empty tokens dropped; `lang`/`source`
@@ -897,19 +895,8 @@ private[graft] object TokenCache {
   }
 
   def tokens(s: SparkSession, d: String): DataFrame =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    cache(s, d, ()) {
       tokenize(graft.Tables(s, d, "documents"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-  def evict(s: SparkSession, d: String): Unit = {
-    val e = cache.remove((s, d))
-    if (e != null) e.unpersist()
-  }
-
-  def clear(): Unit = {
-    val keys = cache.keySet().toArray(Array.empty[(SparkSession, String)])
-    keys.foreach { case (s, d) => evict(s, d) }
-  }
 }

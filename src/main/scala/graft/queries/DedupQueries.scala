@@ -1475,36 +1475,20 @@ object DedupQueries {
   * computed and persisted ONCE per (session, dataset) instead of once
   * per query. This is the "tokenize the corpus once" stage of a 100 TB
   * pipeline: MEMORY_AND_DISK, partition-local, no shuffle to build.
-  *
-  * Lifecycle: entries live until `evict(session, dataset)` / `clear()`
-  * unpersists them — a long-lived service touching many datasets MUST
-  * evict finished ones or pinned blocks accumulate. Staleness: the cache
-  * assumes the `documents` table under a dataset dir is immutable for
-  * the session; if it changes, call `evict` to invalidate.
+  * Lifecycle: [[graft.SessionCache]].
   */
 private[graft] object ShingleCache {
 
   import org.apache.spark.storage.StorageLevel
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
-  /** Unpersist and drop one (session, dataset) entry (no-op if absent). */
-  def evict(s: SparkSession, d: String): Unit = {
-    val e = cache.remove((s, d))
-    if (e != null) { e._1.unpersist(); e._2.unpersist(); e._3.unpersist() }
-  }
-
-  /** Unpersist and drop every entry (session teardown / test cleanup). */
-  def clear(): Unit = {
-    val keys = cache.keySet().toArray(Array.empty[(SparkSession, String)])
-    keys.foreach { case (s, d) => evict(s, d) }
-  }
+  private[graft] val cache =
+    new graft.SessionCache[Unit, (DataFrame, DataFrame, DataFrame)]({
+      case (a, h, hs) => a.unpersist(); h.unpersist(); hs.unpersist()
+    })
 
   private def entry(s: SparkSession, d: String)
     : (DataFrame, DataFrame, DataFrame) =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    cache(s, d, ()) {
       val arrays = graft.Tables(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 3)
@@ -1557,30 +1541,19 @@ private[graft] object ShingleCache {
   * The pair LIST consumers (q21/q23/q257) deliberately do NOT read
   * this cache: they ARE the pair producers whose per-pair scores are
   * the contract; this cache serves the CONNECTIVITY consumers
-  * (components / cluster_best / q277). Lifecycle/staleness contract
-  * identical to [[ShingleCache]].
+  * (components / cluster_best / q277). Lifecycle:
+  * [[graft.SessionCache]].
   */
 private[graft] object PairCache {
 
   import org.apache.spark.storage.StorageLevel
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
-
-  def evict(s: SparkSession, d: String): Unit = {
-    val e = cache.remove((s, d))
-    if (e != null) e.unpersist()
-  }
-
-  def clear(): Unit = {
-    val keys = cache.keySet().toArray(Array.empty[(SparkSession, String)])
-    keys.foreach { case (s, d) => evict(s, d) }
-  }
+  private[graft] val cache =
+    new graft.SessionCache[Unit, DataFrame](_.unpersist())
 
   /** Connectivity pair graph (doc_a, doc_b), persisted on first use. */
   def pairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    cache(s, d, ()) {
       DedupQueries.connectivityPairGraph(s, d)
         .persist(StorageLevel.MEMORY_AND_DISK)
     }

@@ -53,17 +53,36 @@ object DriftOps {
   /** m-estimate prior weight for q221's target encoder. */
   private val PriorM = 20
 
+  /** Session-scoped q220/q250 reference-decile grid — |types|×10 rows,
+    * but one corpus shuffle plus the range-partitioned cumulative pass
+    * to build, and BOTH drift audits read the identical grid. Cached as
+    * DRIVER rows (rebuilt into a frame per call) so nothing
+    * executor-side is pinned.
+    */
+  private val psiGrids = new graft.SessionCache[
+    Unit, Seq[(String, Int, Long, Long, Long, Long)]](_ => ())
+
+  private def cachedPsiGrid(s: SparkSession, d: String): DataFrame = {
+    val rows = psiGrids(s, d, ()) {
+      psiGrid(Tables(s, d, "events")).collect().toSeq.map(r =>
+        (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5)))
+    }
+    import s.implicits._
+    rows.toDF("event_type", "bucket", "cr", "cc", "nr", "nc")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q220 and q250 audit the IDENTICAL reference-decile grid (psiGrid
     // — one corpus shuffle + the range-partitioned cumulative pass),
     // and the grid is |types|×10 rows: the entries share it through
-    // PsiGridCache (driver metadata, nothing executor-side pinned)
+    // cachedPsiGrid (driver metadata, nothing executor-side pinned)
     // instead of each paying the full build. Specs that grid crafted
     // frames keep using psiDrift/emdDrift, which never touch the cache.
-    "q220_psi_drift" -> ((s, d) => psiDriftFrom(PsiGridCache.grid(s, d))),
+    "q220_psi_drift" -> ((s, d) => psiDriftFrom(cachedPsiGrid(s, d))),
     // q250 ordered-EMD drift — see [[emdDrift]]: the distance-aware
     // alternative to PSI over the identical reference-decile grid.
-    "q250_emd_drift" -> ((s, d) => emdDriftFrom(PsiGridCache.grid(s, d))),
+    "q250_emd_drift" -> ((s, d) => emdDriftFrom(cachedPsiGrid(s, d))),
     "q221_target_encode" -> ((s, d) => targetEncode(
       Tables(s, d, "orders"), Tables(s, d, "customer"),
       Tables(s, d, "nation"))),
@@ -597,33 +616,4 @@ object DriftOps {
         |  FROM r GROUP BY 1)
         |SELECT r.doc_id, r.source, r.n_chars, p.qnorm
         |FROM r JOIN p ON r.rk = p.rk""".stripMargin)
-}
-
-/** Session-scoped cache of the q220/q250 reference-decile grid — the
-  * grid is |types|×10 rows but costs one corpus shuffle plus the
-  * range-partitioned cumulative pass to build, and BOTH drift audits
-  * read the identical grid on the same immutable table. Cached as
-  * DRIVER rows (rebuilt into a frame per call) so nothing executor-side
-  * is pinned. Lifecycle contract as [[TokenCache]]: evict on dir
-  * rewrite; keyed per session.
-  */
-private[graft] object PsiGridCache {
-
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Int, Long, Long, Long, Long)]]
-
-  def grid(s: SparkSession, d: String): DataFrame = {
-    val rows = graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
-      DriftOps.psiGrid(Tables(s, d, "events")).collect().toSeq.map(r =>
-        (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5)))
-    }
-    import s.implicits._
-    rows.toDF("event_type", "bucket", "cr", "cc", "nr", "nc")
-  }
-
-  def evict(s: SparkSession, d: String): Unit = cache.remove((s, d))
-
-  def clear(): Unit = cache.clear()
 }

@@ -687,19 +687,18 @@ object GraphQueries {
   * from — and the pass count across its consumers is far beyond the
   * measured ~8-pass pin threshold. q141 is NOT a consumer: its edges
   * are weighted (min line price per link), a different aggregation.
-  * Lifecycle contract as TokenCache: evict on dir rewrite.
+  * Lifecycle: [[graft.SessionCache]].
   */
 private[graft] object TradeEdgeCache {
 
   import org.apache.spark.storage.StorageLevel
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private[graft] val pairsCache =
+    new graft.SessionCache[Unit, DataFrame](_.unpersist())
 
   /** Distinct (cust, supp) trade pairs, pinned on first use. */
   def pairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    pairsCache(s, d, ()) {
       Tables(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables(s, d, "orders")
@@ -717,8 +716,10 @@ private[graft] object TradeEdgeCache {
     pairs(s, d).select((col("cust") * 2).as("u"),
       (col("supp") * 2 + 1).as("v"))
 
-  private val prCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.operators.PageRank.LinkGraph]
+  /** Its own instance: [[prGraph]]'s build reads [[pairs]]. */
+  private[graft] val prGraphs =
+    new graft.SessionCache[Unit, graft.operators.PageRank.LinkGraph](
+      graft.operators.PageRank.release)
 
   /** Session-pinned PageRank working set (deg-joined link table,
     * node/has-in table, node count) over the UNDIRECTED [[uv]] graph —
@@ -731,24 +732,9 @@ private[graft] object TradeEdgeCache {
     */
   def prGraph(s: SparkSession, d: String)
       : graft.operators.PageRank.LinkGraph =
-    graft.SessionCaches.getOrBuild(prCache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    prGraphs(s, d, ()) {
       val ce = uv(s, d)
       graft.operators.PageRank.prepare(
         ce.union(ce.select(col("v").as("u"), col("u").as("v"))))
     }
-
-  def evict(s: SparkSession, d: String): Unit = {
-    val e = cache.remove((s, d))
-    if (e != null) e.unpersist()
-    val g = prCache.remove((s, d))
-    if (g != null) graft.operators.PageRank.release(g)
-  }
-
-  def clear(): Unit = {
-    val keys = cache.keySet().toArray(Array.empty[(SparkSession, String)])
-    keys.foreach { case (s, d) => evict(s, d) }
-    val pk = prCache.keySet().toArray(Array.empty[(SparkSession, String)])
-    pk.foreach { case (s, d) => evict(s, d) }
-  }
 }

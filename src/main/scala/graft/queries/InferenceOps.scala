@@ -688,20 +688,29 @@ object InferenceOps {
     (base, model, ks, picked)
   }
 
+  private val conformalFits = new graft.SessionCache[Unit,
+    (Seq[(String, Double, Double)], Seq[(Any, Long, Long)],
+      Map[Any, Double])](_ => ())
+
   /** The cached-fit form the q254/q255/stream_conformal ENTRIES use:
     * the fit's outputs are |flags| driver numbers, but producing them
     * costs two corpus passes plus an eagerly materialized residual
     * class table — and all three entries need the IDENTICAL fit on the
     * same immutable table, so it runs once per (session, dir). The
     * model frame is rebuilt from the cached coefficient rows; `base`
-    * is a cheap projection rebuilt per call. Lifecycle contract as
-    * [[graft.queries.TokenCache]] (evict on dir rewrite). Specs that
-    * fit crafted frames keep using [[conformal]]/[[conformalDrift]],
-    * which never touch the cache.
+    * is a cheap projection rebuilt per call. Only the fit's DRIVER
+    * METADATA is cached (model coefficient rows, per-group (n_cal, k),
+    * per-group q̂); nothing executor-side is pinned. Specs that fit
+    * crafted frames keep using [[conformal]]/[[conformalDrift]], which
+    * never touch the cache.
     */
   private[graft] def conformalFitCached(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Seq[(Any, Long, Long)], Map[Any, Double]) = {
-    val (modelRows, ks, picked) = ConformalFitCache.meta(s, d)
+    val (modelRows, ks, picked) = conformalFits(s, d, ()) {
+      val (_, model, groups, qs) = conformalFit(Tables(s, d, "lineitem"))
+      (model.collect().toSeq.map(r =>
+        (r.getString(0), r.getDouble(1), r.getDouble(2))), groups, qs)
+    }
     import s.implicits._
     (conformalBase(Tables(s, d, "lineitem")),
       modelRows.toDF("f", "slope", "intercept"), ks, picked)
@@ -1203,31 +1212,4 @@ object InferenceOps {
         |    / sqrt((sxx - sx * sx / n) * (syy - sy * sy / n)), 6) AS acf
         |FROM mom""".stripMargin
   )
-}
-
-/** Session-scoped cache of the conformal fit's DRIVER METADATA (model
-  * coefficient rows, per-group (n_cal, k), per-group q̂) — see
-  * [[InferenceOps.conformalFitCached]]. Nothing executor-side is
-  * pinned; the cached value is ~|flags| numbers.
-  */
-private[graft] object ConformalFitCache {
-
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (Seq[(String, Double, Double)], Seq[(Any, Long, Long)], Map[Any, Double])]
-
-  def meta(s: SparkSession, d: String)
-      : (Seq[(String, Double, Double)], Seq[(Any, Long, Long)],
-          Map[Any, Double]) =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
-      val (_, model, ks, picked) =
-        InferenceOps.conformalFit(Tables(s, d, "lineitem"))
-      (model.collect().toSeq.map(r =>
-        (r.getString(0), r.getDouble(1), r.getDouble(2))), ks, picked)
-    }
-
-  def evict(s: SparkSession, d: String): Unit = cache.remove((s, d))
-
-  def clear(): Unit = cache.clear()
 }

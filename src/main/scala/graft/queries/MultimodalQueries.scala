@@ -242,31 +242,18 @@ object MultimodalQueries {
   * real binary-file ingest — at 100 TB the bytes stream through
   * executors and nothing is collected or pinned) is untouched; this
   * cache exists because the stand-in's encode UDFs are compute, not
-  * scan, cost. Lifecycle contract as [[graft.Tables]]/TradeEdgeCache:
-  * (session, dir)-keyed, immutable dirs, `evict` on rewrite,
-  * stopped-session purge via [[graft.SessionCaches]].
+  * scan, cost. Lifecycle: [[graft.SessionCache]].
   */
 private[graft] object AssetCache {
 
   import org.apache.spark.storage.StorageLevel
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]
+  private[graft] val cache =
+    new graft.SessionCache[Unit, DataFrame](_.unpersist())
 
   def assets(s: SparkSession, d: String): DataFrame =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
+    cache(s, d, ()) {
       Multimodal.syntheticAssets(s, d)
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-  def evict(s: SparkSession, d: String): Unit = {
-    val e = cache.remove((s, d))
-    if (e != null) e.unpersist()
-  }
-
-  def clear(): Unit = {
-    val keys = cache.keySet().toArray(Array.empty[(SparkSession, String)])
-    keys.foreach { case (s, d) => evict(s, d) }
-  }
 }

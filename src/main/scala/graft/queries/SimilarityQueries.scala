@@ -475,50 +475,20 @@ object SimilarityQueries {
   }
 
   /** Session-scoped persisted-index roots: built+committed once per
-    * (session, table dir), served by both IVF entries — the
-    * MergeCache/ShingleCache lifecycle discipline.
+    * (session, table dir), served by both IVF entries. Lifecycle:
+    * [[graft.SessionCache]].
     */
   private[graft] object AnnIndexCache {
-    private val cache = scala.collection.mutable.Map[(SparkSession, String), String]()
-    def root(s: SparkSession, d: String): String = cache.synchronized {
-      cache.getOrElseUpdate((s, d), {
+    private[graft] val cache = new graft.SessionCache[Unit, String](_ => ())
+    def root(s: SparkSession, d: String): String =
+      cache(s, d, ()) {
         val r = java.nio.file.Files.createTempDirectory("graft-annidx")
           .toString
         persistAnnIndex(
           Tables(s, d, "embeddings").select(col("vec_id"), col("embedding")),
           r)
         r
-      })
-    }
-    def evict(s: SparkSession, d: String): Unit =
-      cache.synchronized { cache.remove((s, d)); ingestBase.remove((s, d)) }
-    def clear(): Unit =
-      cache.synchronized { cache.clear(); ingestBase.clear() }
-
-    /** Session-scoped base index for the STREAMING-ingest entry: the
-      * corpus MINUS the held-out arrival slice, trained+committed once
-      * per (session, dir) — a different corpus than [[root]]'s full
-      * index, so different quantizers. Each invocation [[cloneTree]]s
-      * this snapshot into its own private root and streams arrivals
-      * into the clone (round 12, guide §2.4): the entry measures
-      * ingest + serve, not a third quantizer training per run — the
-      * same branch-don't-retrain move sim_ann_forget already makes.
-      * Deterministic build (seeds = lowest vec_ids), so the clone is
-      * byte-equivalent to the per-invocation build it replaces.
-      */
-    private val ingestBase = scala.collection.mutable.Map[(SparkSession, String), String]()
-    def ingestBaseRoot(s: SparkSession, d: String,
-        heldOut: Column): String = cache.synchronized {
-      ingestBase.getOrElseUpdate((s, d), {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft-annstream-base").toString
-        persistAnnIndex(
-          Tables(s, d, "embeddings")
-            .select(col("vec_id"), col("embedding")).filter(!heldOut),
-          r)
-        r
-      })
-    }
+      }
 
     /** Byte-level clone of the cached index snapshot tree into `dest` —
       * the production "branch an index for maintenance" move: entries
@@ -926,8 +896,9 @@ object SimilarityQueries {
     // (cluster, n, c_norm) shape over the updated model.
     "ml_kmeans_inc" -> ((s, d) => {
       val full = lloydCorpus(s, d)
-      val warm = LloydFitCache.incWarm(s, d, k = 5, iters = 2, dim = 64)
-      kmeansReport(full, warm, dim = 64)
+      val base = full.filter(pmod(col("vec_id"), lit(10)) =!= 7)
+      kmeansReport(full,
+        lloydFrom(full, lloydFit(base, 5, 2, 64), 1, 64), dim = 64)
     }),
 
     // Feature-hashed text embeddings [hashing trick, Weinberger et al.
@@ -1142,11 +1113,7 @@ object SimilarityQueries {
       val heldOut = e.filter(holdPred)
       val root = java.nio.file.Files
         .createTempDirectory("graft-annstream").toString
-      // branch the session-pinned minus-heldout snapshot instead of
-      // retraining quantizers per invocation (round 12; the
-      // sim_ann_forget clone discipline — see ingestBaseRoot)
-      AnnIndexCache.cloneTree(AnnIndexCache.ingestBaseRoot(s, d, holdPred),
-        root)
+      persistAnnIndex(e.filter(!holdPred), root)
       val rows = heldOut
         .as[(Long, Array[Float])].collect().toSeq
       val stream = org.apache.spark.sql.execution.streaming.runtime
@@ -1492,49 +1459,23 @@ object SimilarityQueries {
   * already pays. Consumers: q85_kmeans and ml_silhouette share the
   * full-corpus fit (the silhouette audits the SAME trained model
   * rather than an identically-parameterized re-derivation — the
-  * semantics the entry always claimed); ml_kmeans_inc pins its
-  * warm-updated model (base-corpus fit + one full-corpus lloydFrom
-  * update). Fits are deterministic (vec_id-ordered seed, decimal-exact
-  * update sums), so caching cannot change any output — the mm/lloyd
-  * entries were sorted-content-compared against pre-change sf0.1
-  * dumps. Same precedent as ConformalFitCache (round 11); lifecycle
-  * contract as [[graft.Tables]]: (session, dir)-keyed, immutable dirs,
-  * stopped-session purge via [[graft.SessionCaches]].
+  * semantics the entry always claimed). ml_kmeans_inc fits its own
+  * base-corpus model inline: it is that model's only consumer, so a
+  * cache could never pay on first touch. Fits are deterministic
+  * (vec_id-ordered seed, decimal-exact update sums), so caching cannot
+  * change any output. Lifecycle: [[graft.SessionCache]].
   */
 private[graft] object LloydFitCache {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int, Int, Int), Array[Array[Double]]]
+  /** Keyed by (k, iters, dim). */
+  private[graft] val cache =
+    new graft.SessionCache[(Int, Int, Int), Array[Array[Double]]](_ => ())
 
   /** Full-embedding-corpus Lloyd fit (q85_kmeans / ml_silhouette). */
   def corpusFit(s: SparkSession, d: String, k: Int, iters: Int, dim: Int)
       : Array[Array[Double]] =
-    graft.SessionCaches.getOrBuild(cache, (s, d, "corpus", k, iters, dim),
-      (key: (SparkSession, String, String, Int, Int, Int)) => key._1) {
+    cache(s, d, (k, iters, dim)) {
       SimilarityQueries.lloydFit(
         SimilarityQueries.lloydCorpus(s, d), k, iters, dim)
     }
-
-  /** ml_kmeans_inc's warm-updated model: fit on the corpus minus every
-    * 10th vector, then ONE warm lloydFrom update over the full corpus.
-    */
-  def incWarm(s: SparkSession, d: String, k: Int, iters: Int, dim: Int)
-      : Array[Array[Double]] =
-    graft.SessionCaches.getOrBuild(cache, (s, d, "incwarm", k, iters, dim),
-      (key: (SparkSession, String, String, Int, Int, Int)) => key._1) {
-      val full = SimilarityQueries.lloydCorpus(s, d)
-      val base = full.filter(pmod(col("vec_id"), lit(10)) =!= 7)
-      SimilarityQueries.lloydFrom(full,
-        SimilarityQueries.lloydFit(base, k, iters, dim), 1, dim)
-    }
-
-  def evict(s: SparkSession, d: String): Unit = {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) {
-      val key = it.next()
-      if (key._1 == s && key._2 == d) it.remove()
-    }
-  }
-
-  def clear(): Unit = cache.clear()
 }

@@ -346,6 +346,51 @@ object StatsOps {
       .withColumn("overcount", col("est") - col("n"))
   }
 
+  /** Session-scoped lineitem-price percentile boundaries — q106/q202
+    * and their approx twins each paid a full value-count-buffer (or
+    * sketch) pass to probe the SAME distribution at different points.
+    * One 19-point vector (p05..p95 in twentieths, each rounded to 4 dp
+    * exactly as the entries always did) serves all four; keyed by the
+    * approx flag, driver metadata only.
+    */
+  private val pricePercentiles =
+    new graft.SessionCache[Boolean, Map[Int, Double]](_ => ())
+
+  /** twentieth (1..19) -> exact-or-approx percentile of
+    * lineitem.l_extendedprice, rounded to 4 dp.
+    */
+  private def priceBounds(s: SparkSession, d: String, approx: Boolean)
+      : Map[Int, Double] =
+    pricePercentiles(s, d, approx) {
+      val ps = (1 until 20).map(_.toDouble / 20)
+      val agg =
+        if (approx) s"approx_percentile(l_extendedprice, " +
+          s"array(${ps.mkString(",")}), $ApproxAccuracy)"
+        else s"percentile(l_extendedprice, array(${ps.mkString(",")}))"
+      val vs = Tables(s, d, "lineitem")
+        .agg(expr(s"transform($agg, x -> round(x, 4))").as("b"))
+        .head().getSeq[Double](0)
+      (1 until 20).zip(vs).toMap
+    }
+
+  /** [[priceBounds]]' RANK-MACHINERY twin: the same 19-point vector
+    * computed by [[exactQuantilesByRank]] (GlobalRank order statistics —
+    * no value-count buffer), shared by stats_eqdepth_rank and
+    * stats_winsorize_rank. Kept separate from the buffer-form cache on
+    * purpose: the rank twins exist to EXERCISE the rank path, so they
+    * must never silently read buffer-form values (StatsOpsSpec pins the
+    * two paths bit-equal regardless).
+    */
+  private val rankQuantiles =
+    new graft.SessionCache[Unit, Map[Int, Double]](_ => ())
+
+  private def rankBounds(s: SparkSession, d: String): Map[Int, Double] =
+    rankQuantiles(s, d, ()) {
+      val ps = (1 until 20).map(_.toDouble / 20)
+      (1 until 20).zip(exactQuantilesByRank(
+        Tables(s, d, "lineitem"), "l_extendedprice", ps)).toMap
+    }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
       "q102_outliers" -> ((s, d) => outliers(Tables(s, d, "events"))),
@@ -393,12 +438,12 @@ object StatsOps {
       // percentile buffer, just at different points (deciles vs
       // [p05, p95]) — percentile()'s per-point answers are independent
       // of which other points share the array, so the four entries read
-      // a session-cached 19-point boundary vector (PricePercentileCache,
+      // a session-cached 19-point boundary vector (priceBounds,
       // one buffer pass per (session, dir, exact|approx) instead of
       // four). Specs that histogram crafted frames keep using
       // eqDepthHistogram/winsorize, which never touch the cache.
       "q106_eqdepth_hist" -> ((s, d) => {
-        val b = PricePercentileCache.bounds(s, d, approx = false)
+        val b = priceBounds(s, d, approx = false)
         bucketize(Tables(s, d, "lineitem"), "l_extendedprice",
           (1 until EqDepthBuckets).map(i => b(2 * i)))
       }),
@@ -413,7 +458,7 @@ object StatsOps {
       // approx_percentile swap documented at q106 applies unchanged at
       // corpus scale.
       "q202_winsorize" -> ((s, d) => {
-        val b = PricePercentileCache.bounds(s, d, approx = false)
+        val b = priceBounds(s, d, approx = false)
         winsorizeWith(Tables(s, d, "lineitem"), b(1), b(19))
       }),
 
@@ -423,7 +468,7 @@ object StatsOps {
       // pairing). Approximate → rows-only; StatsOpsSpec pins clip
       // counts within 1% of exact and means within 1e-3 at sf0.001.
       "stats_approx_winsorize" -> ((s, d) => {
-        val b = PricePercentileCache.bounds(s, d, approx = true)
+        val b = priceBounds(s, d, approx = true)
         winsorizeWith(Tables(s, d, "lineitem"), b(1), b(19))
       }),
 
@@ -434,7 +479,7 @@ object StatsOps {
       // driver; StatsOpsSpec pins per-bucket depth within 1% of exact
       // at sf0.1.
       "stats_approx_eqdepth" -> ((s, d) => {
-        val b = PricePercentileCache.bounds(s, d, approx = true)
+        val b = priceBounds(s, d, approx = true)
         bucketize(Tables(s, d, "lineitem"), "l_extendedprice",
           (1 until EqDepthBuckets).map(i => b(2 * i)))
       }),
@@ -443,11 +488,11 @@ object StatsOps {
       // statistics by GlobalRank — no corpus-sized percentile buffer,
       // no accuracy trade. Same oracle as q106: exact == exact. The
       // rank twins share ONE rank pass over the same 19-point vector
-      // (RankQuantileCache — rank machinery, deliberately NOT the
-      // buffer-form PricePercentileCache: the twin's identity is the
+      // (rankBounds — rank machinery, deliberately NOT the
+      // buffer-form priceBounds: the twin's identity is the
       // rank path; the spec pins rank == buffer bit-equality anyway).
       "stats_eqdepth_rank" -> ((s, d) => {
-        val b = RankQuantileCache.bounds(s, d)
+        val b = rankBounds(s, d)
         bucketize(Tables(s, d, "lineitem"), "l_extendedprice",
           (1 until EqDepthBuckets).map(i => b(2 * i)))
       }),
@@ -469,7 +514,7 @@ object StatsOps {
       // boundaries from rank-based order statistics instead of the
       // percentile buffer. Same oracle as q202: exact == exact.
       "stats_winsorize_rank" -> ((s, d) => {
-        val b = RankQuantileCache.bounds(s, d)
+        val b = rankBounds(s, d)
         winsorizeWith(Tables(s, d, "lineitem"), b(1), b(19))
       }),
 
@@ -891,68 +936,4 @@ object StatsOps {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |  RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)""".stripMargin)
-}
-
-/** Session-scoped cache of the lineitem-price percentile boundaries —
-  * q106/q202 and their approx twins each paid a full value-count-buffer
-  * (or sketch) pass to probe the SAME distribution at different points.
-  * One 19-point vector (p05..p95 in twentieths, each rounded to 4 dp
-  * exactly as the entries always did) serves all four; keyed by
-  * (session, dir, exact|approx), driver metadata only. Lifecycle as
-  * [[TokenCache]]: evict on dir rewrite.
-  */
-private[graft] object PricePercentileCache {
-
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Boolean), Map[Int, Double]]
-
-  /** twentieth (1..19) -> exact-or-approx percentile of
-    * lineitem.l_extendedprice, rounded to 4 dp.
-    */
-  def bounds(s: SparkSession, d: String, approx: Boolean)
-      : Map[Int, Double] =
-    graft.SessionCaches.getOrBuild(cache, (s, d, approx),
-      (k: (SparkSession, String, Boolean)) => k._1) {
-        val ps = (1 until 20).map(_.toDouble / 20)
-        val agg =
-          if (approx) s"approx_percentile(l_extendedprice, " +
-            s"array(${ps.mkString(",")}), ${StatsOps.ApproxAccuracy})"
-          else s"percentile(l_extendedprice, array(${ps.mkString(",")}))"
-        val vs = Tables(s, d, "lineitem")
-          .agg(expr(s"transform($agg, x -> round(x, 4))").as("b"))
-          .head().getSeq[Double](0)
-        (1 until 20).zip(vs).toMap
-    }
-
-  def evict(s: SparkSession, d: String): Unit = {
-    cache.remove((s, d, true)); cache.remove((s, d, false)); ()
-  }
-
-  def clear(): Unit = cache.clear()
-}
-
-/** [[PricePercentileCache]]'s RANK-MACHINERY twin: the same 19-point
-  * lineitem-price vector computed by [[StatsOps.exactQuantilesByRank]]
-  * (GlobalRank order statistics — no value-count buffer), shared by
-  * stats_eqdepth_rank and stats_winsorize_rank. Kept separate from the
-  * buffer-form cache on purpose: the rank twins exist to EXERCISE the
-  * rank path, so they must never silently read buffer-form values
-  * (StatsOpsSpec pins the two paths bit-equal regardless).
-  */
-private[graft] object RankQuantileCache {
-
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[Int, Double]]
-
-  def bounds(s: SparkSession, d: String): Map[Int, Double] =
-    graft.SessionCaches.getOrBuild(cache, (s, d),
-      (k: (SparkSession, String)) => k._1) {
-      val ps = (1 until 20).map(_.toDouble / 20)
-      (1 until 20).zip(StatsOps.exactQuantilesByRank(
-        Tables(s, d, "lineitem"), "l_extendedprice", ps)).toMap
-    }
-
-  def evict(s: SparkSession, d: String): Unit = cache.remove((s, d))
-
-  def clear(): Unit = cache.clear()
 }

@@ -238,7 +238,7 @@ class AnnSpec extends SparkSpec {
     import graft.queries.SimilarityQueries
     val sc = spark.sparkContext
     // fresh build, measured under its own job group
-    SimilarityQueries.AnnIndexCache.evict(spark, sf)
+    SimilarityQueries.AnnIndexCache.cache.evict(spark, sf)
     sc.setJobGroup("ann-build", "index build", interruptOnCancel = false)
     val root = try SimilarityQueries.AnnIndexCache.root(spark, sf)
       finally sc.clearJobGroup()
@@ -645,7 +645,7 @@ class AnnSpec extends SparkSpec {
     assert(m1.length == fresh.length &&
       m1.zip(fresh).forall { case (a, b) => a.sameElements(b) },
       "cached fit must equal a fresh deterministic fit")
-    LloydFitCache.evict(spark, sf)
+    LloydFitCache.cache.evict(spark, sf)
     val m2 = LloydFitCache.corpusFit(spark, sf, k = 5, iters = 2, dim = 64)
     assert(!(m2 eq m1) && m2.zip(m1).forall {
       case (a, b) => a.sameElements(b) },

@@ -88,7 +88,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("query entries: ranked table, per-doc stats, cached single train") {
-    BpeOps.MergeCache.clear()
+    BpeOps.MergeCache.cache.evict(spark, sf)
     val table = SparkEntry.queries("text_bpe_train")(spark, sf)
       .orderBy("rank").collect()
     assert(table.nonEmpty && table.length <= BpeOps.NumMerges)
@@ -102,7 +102,7 @@ class BpeSpec extends SparkSpec {
       assert(r.getLong(2) >= r.getLong(1),
         "a word is at least one subword")
     }
-    BpeOps.MergeCache.evict(spark, sf)
+    BpeOps.MergeCache.cache.evict(spark, sf)
   }
 
   test("fertility: hand-computed per-language subword/char ratios") {

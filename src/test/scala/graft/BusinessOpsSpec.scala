@@ -341,7 +341,7 @@ class BusinessOpsSpec extends SparkSpec {
       assert(got(1L) == ((2L, 2L, 1.0)))
       assert(got(2L)._1 == 4L && got(2L)._2 == 1L)
       assert(got(3L)._2 == 0L && got(3L)._3 == 0.0)
-    } finally graft.queries.ShingleCache.evict(spark, d)
+    } finally graft.queries.ShingleCache.cache.evict(spark, d)
   }
 
   test("conc_globalrank equals q172 row-for-row and a hand-computed Gini") {

@@ -315,7 +315,7 @@ class DedupSpec extends SparkSpec {
     arrays.count()
     assert(arrays.storageLevel.useMemory || arrays.storageLevel.useDisk,
       "cache entry should be persisted after use")
-    graft.queries.ShingleCache.evict(spark, sf)
+    graft.queries.ShingleCache.cache.evict(spark, sf)
     assert(arrays.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evict must unpersist the shingle frames")
     // repopulate for any later suite that relies on the cache
@@ -355,7 +355,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == direct && got.nonEmpty)
     assert(cached.storageLevel.useMemory || cached.storageLevel.useDisk)
-    graft.queries.PairCache.evict(spark, sf)
+    graft.queries.PairCache.cache.evict(spark, sf)
     assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evict must unpersist the pair list")
 
@@ -389,7 +389,7 @@ class DedupSpec extends SparkSpec {
     val fe = full.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ce.subsetOf(fe) && ce.size < fe.size,
       s"collapsed=${ce.size} full=${fe.size}")
-    graft.queries.ShingleCache.evict(spark, dir)
+    graft.queries.ShingleCache.cache.evict(spark, dir)
   }
 
   test("prefix-filtered Jaccard equals q23 pair for pair, score for score") {
@@ -443,7 +443,7 @@ class DedupSpec extends SparkSpec {
           r.getDouble(3), r.getDouble(4)))
       // only the (s1, s2) pair exists; 4 shared 3-grams, both sides 4
       assert(got.toSeq === Seq(("s1", "s2", 4L, 1.0, 1.0)))
-    } finally graft.queries.ShingleCache.evict(spark, dir)
+    } finally graft.queries.ShingleCache.cache.evict(spark, dir)
   }
 
   test("q229 source overlap on driver data: bounded, symmetric-free, sane") {

@@ -455,7 +455,7 @@ class MultimodalSpec extends SparkSpec {
     // hit path returns the SAME pinned plan (no re-synthesis)
     assert(AssetCache.assets(spark, sf) eq a,
       "second lookup must be a cache hit")
-    AssetCache.evict(spark, sf)
+    AssetCache.cache.evict(spark, sf)
     assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evict must unpersist the asset table")
     // repopulate for any later suite that relies on the cache

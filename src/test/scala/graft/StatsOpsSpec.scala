@@ -289,7 +289,7 @@ class StatsOpsSpec extends SparkSpec {
       .parquet(s"$dir/events.parquet")
     // the table dir was rewritten IN PLACE: drop the session-cached
     // resolution (Tables' documented staleness contract) before re-read
-    graft.Tables.evict(spark, dir)
+    graft.Tables.resolved.evict(spark, dir)
     val r2 = StatsOps.queries("q252_hill_tail")(spark, dir).collect()
     assert(r2.map(_.getString(0)).toSet === Set("t"))
   }
