@@ -1,6 +1,6 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** MR-core parity facade (SURVEY.md §2.1–2.2, Phase 1): the reference
@@ -13,12 +13,18 @@ import org.apache.spark.sql.functions._
   *    `Worker/worker_v1.py:133`; no comma → whole line is the key);
   *  - MAP = arbitrary line → 0..n lines (`Worker/worker_v1.py:113-116`);
   *  - SHUFFLE = hash-partition on key (`Worker/shuffler.py:6-10`,
-  *    `Worker/worker_v1.py:124-153`) — here Spark's Exchange; any
-  *    consistent hash preserves the co-location semantics;
-  *  - pre-reduce SORT = lexicographic whole-line order within partition
-  *    (`Worker/worker_v1.py:184-191`);
+  *    `Worker/worker_v1.py:124-153`) — here one Dataset `repartition`
+  *    Exchange; any consistent hash preserves the co-location semantics;
+  *  - pre-reduce SORT = whole-line code-point order within partition
+  *    (`Worker/worker_v1.py:184-191`, Python `list.sort()`) — here
+  *    `sortWithinPartitions` on UTF-8 bytes;
   *  - REDUCE = user fold over the sorted partition, keys contiguous
   *    (`Worker/worker_v1.py:196-199`).
+  *
+  * READ runs no shuffle: it is the `graft-dfs` scan, whose partition
+  * order is manifest order. That order holds for narrow consumers
+  * (`collect`, `toLocalIterator`, `write.text`); a consumer that shuffles
+  * and needs it reads `graft-dfs` and sorts on `chunk_id, line_no`.
   *
   * The typed relational surface (graft.queries) is the engine's real API;
   * this facade exists so every job the reference runs today has a literal
@@ -36,6 +42,13 @@ object MapReduce {
     if (i < 0) line else line.substring(0, i)
   }
 
+  /** Marker file recording that the source had NO trailing newline, so
+    * `Cli -r` can reassemble byte-for-byte (text lines lose the final
+    * newline's presence/absence at split time). Underscore-prefixed →
+    * invisible to Spark file scans, like _SUCCESS.
+    */
+  private[graft] val NoTrailingNewline = "_no_trailing_newline"
+
   /** S1 WRITE: ingest a local text file into the DFS dir, split into
     * `partitions` chunks of CONTIGUOUS line ranges, chunk order = line
     * order — the reference splits by line count (`Client/client_v1.py:
@@ -44,13 +57,6 @@ object MapReduce {
     * manifest order, and READ can reassemble the original file
     * byte-for-byte. (Empty chunks the reference pads are native here.)
     */
-  /** Marker file recording that the source had NO trailing newline, so
-    * `Cli -r` can reassemble byte-for-byte (text lines lose the final
-    * newline's presence/absence at split time). Underscore-prefixed →
-    * invisible to Spark file scans, like _SUCCESS.
-    */
-  private[graft] val NoTrailingNewline = "_no_trailing_newline"
-
   def write(spark: SparkSession, src: String, dfsDir: String,
       partitions: Int): Unit = {
     import spark.implicits._
@@ -110,25 +116,21 @@ object MapReduce {
       .exists(marker)
   }
 
-  /** S2 READ: gather a DFS dir back into one dataset of lines in
-    * MANIFEST ORDER — part files in name order, lines within each file in
-    * file order — matching the reference's chunk reassembly
-    * (`Client/client_v1.py:172-175`), so a WRITE→READ roundtrip returns
-    * the original line sequence. Ordering key: (file name, file block
-    * offset, monotonically_increasing_id). The block offset matters when
-    * a part file exceeds `files.maxPartitionBytes` and is split across
-    * scan partitions: partition ids (the id's high bits) don't follow
-    * file offset order, but `_metadata.file_block_start` does; within one
-    * block the id is row-ordered, so the triple is total file order.
+  /** S2 READ: the DFS dir as one dataset of lines in MANIFEST ORDER —
+    * part files in name order, lines within each file in file order —
+    * matching the reference's chunk reassembly (`Client/client_v1.py:
+    * 172-175`), so a WRITE→READ roundtrip returns the original line
+    * sequence. This is the `graft-dfs` scan: one partition per chunk, in
+    * name order, each read front to back, so partition order IS manifest
+    * order and no sort or shuffle runs. The order holds for narrow
+    * consumers (`collect`, `toLocalIterator`, `write.text`); a consumer
+    * that shuffles and still needs it reads `graft-dfs` and sorts on
+    * `chunk_id, line_no`. A missing dir fails at the first action, with
+    * the path in the error.
     */
   def read(spark: SparkSession, dfsDir: String): Dataset[String] = {
     import spark.implicits._
-    spark.read.textFile(dfsDir)
-      .select(col("value"), input_file_name().as("_f"),
-        col("_metadata.file_block_start").as("_blk"),
-        monotonically_increasing_id().as("_pos"))
-      .orderBy(col("_f"), col("_blk"), col("_pos"))
-      .select(col("value")).as[String]
+    spark.read.format("graft-dfs").load(dfsDir).select("value").as[String]
   }
 
   /** D1 MAP: per-line transform with flatMap power (0..n output lines). */
@@ -138,55 +140,53 @@ object MapReduce {
     ds.flatMap(mapper)
   }
 
-  /** D2+D3+D4: shuffle on the first-comma key, sort each partition
-    * lexicographically, then stream each contiguous key group through the
-    * reducer — the exact Hadoop contract, including whole-line value
-    * order within a group. Implemented on the RDD layer because "reducer
-    * sees the whole sorted partition as a stream" is genuinely
-    * per-partition imperative logic.
+  /** D2+D3: hash-partition lines on the first-comma key (`substring_index`
+    * is exactly [[keyOf]]) into `numPartitions` partitions, then sort each
+    * partition on (key, line): keys contiguous, lines within a key in
+    * whole-line order. Strings compare as UTF-8 bytes, i.e. code-point
+    * order — the order of the reference's Python `list.sort()`. A
+    * `repartition` with an explicit count is never coalesced by AQE, and
+    * the key column is projected after the exchange so it is not shuffled.
     */
-  /** Partitions on the key component only, so the composite (key, line)
-    * sort key gives a secondary sort: keys contiguous, lines within a key
-    * in whole-line lexicographic order — the order YaMR's pre-reduce
-    * whole-line `sort()` produces for well-formed `key,value` lines.
-    */
-  private class KeyPartitioner(n: Int) extends org.apache.spark.Partitioner {
-    def numPartitions: Int = n
-    def getPartition(key: Any): Int = {
-      val h = key.asInstanceOf[(String, String)]._1.hashCode
-      ((h % n) + n) % n
-    }
+  private def shuffleSorted(lines: Dataset[String], numPartitions: Int)
+      : DataFrame = {
+    val key = substring_index(col("value"), ",", 1)
+    lines.toDF("value")
+      .repartition(numPartitions, key)
+      .select(key.as("key"), col("value"))
+      .sortWithinPartitions("key", "value")
   }
 
+  /** D2+D3+D4: shuffle on the first-comma key, sort each partition, then
+    * stream each contiguous key group through the reducer — the exact
+    * Hadoop contract, including whole-line value order within a group.
+    * The reducer sees the whole sorted partition as a stream, so the
+    * group framing is per-partition imperative logic.
+    */
   def reduceByLineKey(ds: Dataset[String], numPartitions: Int)(
       reducer: (String, Iterator[String]) => IterableOnce[String])
       : Dataset[String] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val reduced = ds.rdd
-      .map(line => ((keyOf(line), line), null))
-      .repartitionAndSortWithinPartitions(new KeyPartitioner(numPartitions))
-      .mapPartitions { it =>
-        new Iterator[Iterator[String]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Iterator[String] = {
-            val key = buf.head._1._1
-            val group = new Iterator[String] {
-              def hasNext: Boolean = buf.hasNext && buf.head._1._1 == key
-              def next(): String = buf.next()._1._2
-            }
-            val out = reducer(key, group).iterator
-            // reducers that don't drain the group must not break framing
-            new Iterator[String] {
-              def hasNext: Boolean =
-                if (out.hasNext) true else { while (group.hasNext) group.next(); false }
-              def next(): String = out.next()
-            }
+    import ds.sparkSession.implicits._
+    shuffleSorted(ds, numPartitions).as[(String, String)].mapPartitions { it =>
+      new Iterator[Iterator[String]] {
+        private val buf = it.buffered
+        def hasNext: Boolean = buf.hasNext
+        def next(): Iterator[String] = {
+          val key = buf.head._1
+          val group = new Iterator[String] {
+            def hasNext: Boolean = buf.hasNext && buf.head._1 == key
+            def next(): String = buf.next()._2
           }
-        }.flatten
-      }
-    spark.createDataset(reduced)
+          val out = reducer(key, group).iterator
+          // reducers that don't drain the group must not break framing
+          new Iterator[String] {
+            def hasNext: Boolean =
+              if (out.hasNext) true else { while (group.hasNext) group.next(); false }
+            def next(): String = out.next()
+          }
+        }
+      }.flatten
+    }
   }
 
   /** One whole MR round, closure form: MAP → SHUFFLE → SORT → REDUCE
@@ -209,10 +209,8 @@ object MapReduce {
       reducerCmd: String, numPartitions: Int): Dataset[String] = {
     val spark = input.sparkSession
     import spark.implicits._
-    val mapped = input.rdd.pipe(mapperCmd)
-    val sorted = mapped.map(line => ((keyOf(line), line), null))
-      .repartitionAndSortWithinPartitions(new KeyPartitioner(numPartitions))
-      .map(_._1._2)
-    spark.createDataset(sorted.pipe(reducerCmd))
+    val mapped = spark.createDataset(input.rdd.pipe(mapperCmd))
+    val sorted = shuffleSorted(mapped, numPartitions).select("value").as[String]
+    spark.createDataset(sorted.rdd.pipe(reducerCmd))
   }
 }

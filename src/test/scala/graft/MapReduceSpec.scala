@@ -94,13 +94,16 @@ class MapReduceSpec extends SparkSpec {
   }
 
   test("reducer sees values of one key, in lexicographic line order") {
+    // k4: code-point order, as Python sorted() gives it: U+FF61 before
+    // U+1F600, whose UTF-16 surrogate pair would sort first
     val input = spark.createDataset(Seq(
-      "k1,z", "k1,a", "k2,m", "k1,b", "k3,x", "k2,a"))
+      "k1,z", "k1,a", "k2,m", "k1,b", "k3,x", "k2,a", "k4,😀", "k4,｡"))
     val out = MapReduce.reduceByLineKey(input, 3) { (k, vs) =>
       Iterator(s"$k -> ${vs.mkString("|")}")
     }.collect().sorted
     assert(out.sameElements(Array(
-      "k1 -> k1,a|k1,b|k1,z", "k2 -> k2,a|k2,m", "k3 -> k3,x")))
+      "k1 -> k1,a|k1,b|k1,z", "k2 -> k2,a|k2,m", "k3 -> k3,x",
+      "k4 -> k4,｡|k4,😀")))
   }
 
   test("reducer that does not drain its group still frames correctly") {
@@ -111,6 +114,45 @@ class MapReduceSpec extends SparkSpec {
     }.collect().sorted
     assert(out.length == 2)
     assert(out(0) == "k1,k1,a" && out(1) == "k2,k2,x")
+  }
+
+  test("plan shape: READ shuffles nothing, one MR round shuffles once") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    val tmp = Files.createTempDirectory("graft-mr-plan").toString
+    val src = s"$tmp/input.txt"
+    Files.write(Paths.get(src), (1 to 50).map(i => s"w${i % 7} w$i")
+      .mkString("\n").getBytes)
+    MapReduce.write(spark, src, s"$tmp/dfs", partitions = 3)
+    // every node of the final adaptive plan, query stages included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def executed(ds: org.apache.spark.sql.Dataset[String]) = {
+      ds.collect() // AQE finalizes the plan on the first action
+      nodes(ds.queryExecution.executedPlan)
+    }
+    val read = executed(MapReduce.read(spark, s"$tmp/dfs"))
+    assert(read.collect { case e: Exchange => e }.isEmpty,
+      s"READ must not shuffle (a global sort came back?):\n${read.head}")
+    val mr = executed(MapReduce.mapReduce(MapReduce.read(spark, s"$tmp/dfs"),
+      line => line.split(" ").iterator.map(w => s"$w,1"),
+      (k, vs) => Iterator(s"$k,${vs.size}"), numPartitions = 5))
+    val shuffles = mr.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.map(_.numPartitions) == Seq(5),
+      s"one 5-way shuffle:\n${mr.head}")
+  }
+
+  test("READ of a missing store dir fails naming the path") {
+    val missing = Files.createTempDirectory("graft-mr-missing")
+      .resolve("no_such_store").toString
+    val e = intercept[Exception] { MapReduce.read(spark, missing).collect() }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains(missing)), msgs.mkString(" / "))
   }
 
   test("pipe MR: external python mapper/reducer (YaMR user contract)") {
