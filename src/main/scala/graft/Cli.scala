@@ -59,8 +59,8 @@ object Cli {
         val name = rest.headOption.getOrElse {
           // file base name, as the reference. Dotfiles like ".env" have
           // an empty stem — use the name behind the leading dots (a
-          // dot-named dataset dir would be invisible to Spark's file
-          // scans, which treat dot/underscore paths as hidden)
+          // dot-named dataset dir would be hidden, by the dot/underscore
+          // convention the store keeps for its own metadata files)
           val base = new java.io.File(src).getName
           val stem = base.dropWhile(_ == '.').split('.').head
           if (stem.isEmpty) base else stem
@@ -84,7 +84,8 @@ object Cli {
           .getOrElse(spark.sparkContext.defaultParallelism.min(8))
         MapReduce.mapReducePipe(
             MapReduce.read(spark, s"$dfs/$name"), mapperCmd, reducerCmd, parts)
-          .write.mode("overwrite").text(s"$dfs/${name}_out")
+          .write.format("graft-dfs").mode("overwrite")
+          .save(s"$dfs/${name}_out")
         println("Map-Reduce process has finished and can be read using " +
           s"the filename : ${name}_out")
       case _ =>

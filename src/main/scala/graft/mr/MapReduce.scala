@@ -1,7 +1,15 @@
 package graft.mr
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{DfsTable, SerializableHadoopConf}
 
 /** MR-core parity facade (SURVEY.md §2.1–2.2, Phase 1): the reference
   * engine's three verbs — WRITE, READ, MAPREDUCE — re-expressed on Spark
@@ -21,10 +29,11 @@ import org.apache.spark.sql.functions._
   *  - REDUCE = user fold over the sorted partition, keys contiguous
   *    (`Worker/worker_v1.py:196-199`).
   *
-  * READ runs no shuffle: it is the `graft-dfs` scan, whose partition
-  * order is manifest order. That order holds for narrow consumers
-  * (`collect`, `toLocalIterator`, `write.text`); a consumer that shuffles
-  * and needs it reads `graft-dfs` and sorts on `chunk_id, line_no`.
+  * The chunk store is the `graft-dfs` connector's: WRITE commits through
+  * it in one job, and READ is its scan, whose partition order is manifest
+  * order, so neither shuffles. That order holds for narrow consumers
+  * (`collect`, `toLocalIterator`, a `graft-dfs` write); a consumer that
+  * shuffles and needs it reads `graft-dfs` and sorts on `chunk_id, line_no`.
   *
   * The typed relational surface (graft.queries) is the engine's real API;
   * this facade exists so every job the reference runs today has a literal
@@ -42,76 +51,58 @@ object MapReduce {
     if (i < 0) line else line.substring(0, i)
   }
 
-  /** Marker file recording that the source had NO trailing newline, so
-    * `Cli -r` can reassemble byte-for-byte (text lines lose the final
-    * newline's presence/absence at split time). Underscore-prefixed →
-    * invisible to Spark file scans, like _SUCCESS.
-    */
-  private[graft] val NoTrailingNewline = "_no_trailing_newline"
-
-  /** S1 WRITE: ingest a local text file into the DFS dir, split into
-    * `partitions` chunks of CONTIGUOUS line ranges, chunk order = line
-    * order — the reference splits by line count (`Client/client_v1.py:
-    * 96-115`), so chunk k holds lines before chunk k+1's. Range-partition
-    * on the global line index reproduces that: part-file name order IS
-    * manifest order, and READ can reassemble the original file
-    * byte-for-byte. (Empty chunks the reference pads are native here.)
+  /** S1 WRITE: ingest a text file as `partitions` chunks `part-00000` …,
+    * committed through `graft-dfs` in ONE job with no shuffle. As Hadoop
+    * splits input, task k reads byte range `[k·len/p, (k+1)·len/p)` with
+    * Hadoop's `LineRecordReader`: each line goes to exactly one range (the
+    * one holding the byte before it), framed by `\n`, `\r\n` or `\r` as the
+    * text scan frames it, so chunk k is a contiguous run of lines and chunk
+    * order is line order. Contract: chunks are balanced by BYTES, not by
+    * line count as the reference's (`Client/client_v1.py:96-115`); a range
+    * that gets no line is an empty chunk. A source without a final newline
+    * is marked, so `Cli -r` reassembles it byte for byte. Compressed
+    * sources are rejected: a split cannot seek inside them.
     */
   def write(spark: SparkSession, src: String, dfsDir: String,
       partitions: Int): Unit = {
-    import spark.implicits._
-    import org.apache.hadoop.fs.{FileUtil, Path}
     val conf = spark.sparkContext.hadoopConfiguration
-    // Spark file listings treat dot/underscore-prefixed names as hidden
-    // even when the path is given explicitly — a ".env" source would
-    // silently scan as empty. Stage a visible copy beside the target.
-    val srcPath = new Path(src)
-    val hidden = { val n = srcPath.getName
-      n.startsWith(".") || n.startsWith("_") }
-    val staged = if (!hidden) None else {
-      val stage = new Path(s"$dfsDir.staging-src")
-      FileUtil.copy(srcPath.getFileSystem(conf), srcPath,
-        stage.getFileSystem(conf), stage, false, true, conf)
-      Some(stage)
-    }
-    val scanPath = staged.map(_.toString).getOrElse(src)
-    try {
-      spark.createDataset(spark.read.textFile(scanPath).rdd.zipWithIndex())
-        .toDF("value", "idx")
-        .repartitionByRange(partitions, col("idx"))
-        .sortWithinPartitions("idx")
-        .select("value")
-        .write.mode("overwrite").text(dfsDir)
-      if (!endsWithNewline(spark, scanPath)) {
-        val marker = new Path(dfsDir, NoTrailingNewline)
-        marker.getFileSystem(conf).create(marker, true).close()
-      }
-    } finally staged.foreach(p => p.getFileSystem(conf).delete(p, false))
-  }
-
-  /** True iff the source file's last byte is \n (empty files count as
-    * newline-terminated: they roundtrip to empty). Hadoop FS API, so the
-    * check works for any source the scan itself can read.
-    */
-  private def endsWithNewline(spark: SparkSession, src: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(src)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new Path(src)
+    require(new CompressionCodecFactory(conf).getCodec(path) == null,
+      s"WRITE needs an uncompressed text source, got $src")
+    val fs = path.getFileSystem(conf)
     val len = fs.getFileStatus(path).getLen
-    if (len == 0) true
-    else {
-      val in = fs.open(path)
-      try { in.seek(len - 1); in.read() == '\n' }
-      finally in.close()
-    }
+    val endsWithNewline = len == 0 || { val in = fs.open(path)
+      try { in.seek(len - 1); in.read() == '\n' } finally in.close() }
+    val hconf = new SerializableHadoopConf(conf)
+    val lines = spark.sparkContext.parallelize(0 until partitions, partitions)
+      .flatMap { k =>
+        val (start, end) = (k * len / partitions, (k + 1) * len / partitions)
+        // an empty range gets no line (at 0 the reader would take line 0)
+        if (start == end) Iterator.empty else {
+          val reader = new LineRecordReader()
+          TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
+          reader.initialize(new FileSplit(new Path(src), start, end - start,
+            Array.empty[String]),
+            new TaskAttemptContextImpl(hconf.value, new TaskAttemptID()))
+          Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
+            .map(_ => reader.getCurrentValue.copyBytes())
+        }
+      }
+    // raw line bytes; the binary → string cast does not decode them
+    spark.createDataset(lines)(Encoders.BINARY)
+      .select(col("value").cast("string").as("value"))
+      .write.format("graft-dfs").mode("overwrite").save(dfsDir)
+    if (!endsWithNewline)
+      fs.create(new Path(dfsDir, DfsTable.NoTrailingNewline), true).close()
   }
 
   /** True iff `write` recorded that the dataset's source lacked a final
-    * newline (datasets produced by MR output default to newline-
-    * terminated, matching the text sink's own framing).
+    * newline. Any other `graft-dfs` overwrite (MR output included) clears
+    * the marker, so its lines read back newline-terminated.
     */
   private[graft] def lacksTrailingNewline(spark: SparkSession,
       dfsDir: String): Boolean = {
-    val marker = new org.apache.hadoop.fs.Path(dfsDir, NoTrailingNewline)
+    val marker = new Path(dfsDir, DfsTable.NoTrailingNewline)
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(marker)
   }
@@ -123,9 +114,9 @@ object MapReduce {
     * sequence. This is the `graft-dfs` scan: one partition per chunk, in
     * name order, each read front to back, so partition order IS manifest
     * order and no sort or shuffle runs. The order holds for narrow
-    * consumers (`collect`, `toLocalIterator`, `write.text`); a consumer
-    * that shuffles and still needs it reads `graft-dfs` and sorts on
-    * `chunk_id, line_no`. A missing dir fails at the first action, with
+    * consumers (`collect`, `toLocalIterator`, a `graft-dfs` write); a
+    * consumer that shuffles and still needs it reads `graft-dfs` and sorts
+    * on `chunk_id, line_no`. A missing dir fails at the first action, with
     * the path in the error.
     */
   def read(spark: SparkSession, dfsDir: String): Dataset[String] = {

@@ -42,16 +42,19 @@ class SerializableHadoopConf(@transient private var conf: Configuration)
   * the idiomatic Spark home for the reference DFS's READ semantics
   * (reference `Client/client_v1.py:172-175` reassembles chunks in
   * manifest order; `Master/masterhandler.py:29-31` maps a logical file to
-  * its chunk list). A store directory is what [[graft.mr.MapReduce.write]]
-  * produces: visible part files whose NAME order is the manifest order,
-  * each holding contiguous text lines.
+  * its chunk list). The connector is the store's only writer
+  * ([[graft.mr.MapReduce.write]] and `Cli -mr` output commit through it),
+  * so it owns the format: visible chunks `part-%05d` whose NAME order is
+  * the manifest order, each holding contiguous text lines; the
+  * temp-then-rename commit ([[DfsBatchWrite]]); and the
+  * [[DfsTable.NoTrailingNewline]] marker.
   *
   * Design for the cluster:
   *  - one InputPartition PER CHUNK — the reference's chunk-per-worker
   *    placement expressed as Spark's native parallelism unit;
   *  - manifest order exposed AS DATA (`chunk_id`, `line_no`): partitions
   *    are planned in chunk order and each chunk is read front to back, so
-  *    narrow consumers (`collect`, `toLocalIterator`, `write.text`) see
+  *    narrow consumers (`collect`, `toLocalIterator`, a write) see
   *    manifest order as-is — [[graft.mr.MapReduce.read]] relies on exactly
   *    that — but no order survives a shuffle, so a consumer that shuffles
   *    and needs the order sorts on `chunk_id, line_no`;
@@ -91,6 +94,11 @@ object DfsTable {
   val Schema: StructType = StructType(Seq(
     StructField("value", StringType, nullable = false)))
 
+  /** Marks that [[graft.mr.MapReduce.write]]'s source had NO final
+    * newline, for `Cli -r`; not a chunk (`_`), and an overwrite drops it.
+    */
+  val NoTrailingNewline = "_no_trailing_newline"
+
   private[sources] def metaCol(colName: String, dt: org.apache.spark.sql.types.DataType)
     : MetadataColumn = new MetadataColumn {
     override def name(): String = colName
@@ -101,7 +109,7 @@ object DfsTable {
   }
 
   /** Visible files of the store dir in NAME order (= manifest order; the
-    * `_`/`.`-prefixed markers the MR writer leaves are metadata, exactly
+    * `_`/`.`-prefixed marker and checksum files are metadata, exactly
     * Spark's own hidden-file convention). Returns (chunk id, path, bytes).
     */
   def chunks(dir: String, conf: Configuration): Seq[(Int, String, Long)] = {
@@ -256,6 +264,7 @@ class DfsBatchWrite(dir: String, truncate: Boolean) extends BatchWrite {
     if (truncate && fs.exists(p)) {
       DfsTable.chunks(dir, conf).foreach { case (_, f, _) =>
         fs.delete(new Path(f), false) }
+      fs.delete(new Path(p, DfsTable.NoTrailingNewline), false)
     }
     fs.mkdirs(p)
     // append lands AFTER the existing manifest (new chunks extend the
@@ -287,12 +296,11 @@ class DfsWriterFactory(dir: String, conf: SerializableHadoopConf)
     : DataWriter[InternalRow] = new DataWriter[InternalRow] {
     private val temp = new Path(dir, s"_temp/part-$partitionId-$taskId")
     private val fs = temp.getFileSystem(conf.value)
-    private val out = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(fs.create(temp, true),
-        java.nio.charset.StandardCharsets.UTF_8))
+    private val out = new java.io.BufferedOutputStream(fs.create(temp, true))
 
+    // raw bytes, not decoded: the reader passes them through the same way
     override def write(row: InternalRow): Unit = {
-      out.write(row.getUTF8String(0).toString)
+      row.getUTF8String(0).writeTo(out)
       out.write('\n')
     }
 

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -55,8 +58,10 @@ class DfsSourceSpec extends SparkSpec {
     assert(scanParts(one) == 1, "equality must plan exactly one chunk")
     // the residual filter still applies (values correct, not just fewer
     // partitions) and range predicates prune too
+    // chunks are byte ranges: 311 bytes in 4, chunk 2 = [155, 233), which
+    // holds the lines starting in (155, 233]: line-22 … line-31
     assert(one.select("value").collect().map(_.getString(0)).toSet
-      == (21 to 30).map(i => s"line-$i").toSet)
+      == (22 to 31).map(i => s"line-$i").toSet)
     val range = all.filter(col("chunk_id") >= 2).select("value")
     assert(scanParts(range) == 2)
     // an unsupported shape keeps every chunk (conservative) but rows
@@ -162,6 +167,38 @@ class DfsSourceSpec extends SparkSpec {
       Seq((1, "x")).toDF("id", "value")
         .write.format("graft-dfs").mode("overwrite").save(dir)
     }
+  }
+
+  test("undecodable bytes pass through a graft-dfs write and read raw") {
+    val base = Files.createTempDirectory("graft-dfs-raw")
+    val src = base.resolve("raw.txt")
+    val bytes = "ok\n".getBytes(UTF_8) ++ Array(0xFF, 0xFE, '\n').map(_.toByte)
+    Files.write(src, bytes)
+    val dir = base.resolve("store").toString
+    spark.read.text(src.toString)
+      .write.format("graft-dfs").mode("overwrite").save(dir)
+    val back = spark.read.format("graft-dfs").load(dir)
+      .orderBy("chunk_id", "line_no").select(col("value").cast("binary"))
+      .collect().map(_.getAs[Array[Byte]](0))
+    assert(back.flatMap(_ :+ '\n'.toByte).toSeq == bytes.toSeq)
+  }
+
+  test("graft-dfs is the only chunk-store writer: no text sink in src/main") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"no $root under ${Paths.get("").toAbsolutePath}")
+    // `.write`, any chained calls, then the text sink; readers do not match
+    val textSink = ("""\.write\b(?:\s*\.\s*\w+\s*\([^()]*\))*\s*\.\s*""" +
+      """(?:text\s*\(|format\s*\(\s*"text"\s*\))""").r
+    val walk = Files.walk(root)
+    val hits =
+      try walk.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => textSink
+          .findFirstIn(new String(Files.readAllBytes(p), UTF_8)).isDefined)
+        .map(p => root.relativize(p).toString).toList.sorted
+      finally walk.close()
+    assert(hits === Nil)
   }
 
   test("a filtered projection keeps the pruned schema and right rows") {

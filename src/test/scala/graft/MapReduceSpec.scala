@@ -28,6 +28,72 @@ class MapReduceSpec extends SparkSpec {
     val back = MapReduce.read(spark, s"$tmp/dfs").collect()
     assert(back.sameElements(lines),
       "READ must reassemble chunks in manifest order (original line order)")
+    // \r\n and bare \r framing (empty lines included), cut so that one
+    // split boundary falls inside a line and one on a terminator (for
+    // \r\n, between its two bytes): READ returns the text scan's lines
+    val varied = (1 to 100).map(i => if (i % 9 == 4) "" else s"l$i," + "x" * (i % 7))
+    for ((nl, name) <- Seq("\r\n" -> "crlf", "\r" -> "cr")) {
+      val bytes = varied.mkString("", nl, nl).getBytes("UTF-8")
+      def bounds(p: Int) = (1 until p).map(k => k * bytes.length / p)
+      def midLine(b: Int) = !"\r\n".contains(bytes(b - 1).toChar) &&
+        !"\r\n".contains(bytes(b).toChar)
+      def onTerminator(b: Int) = if (nl == "\r\n")
+        bytes(b - 1) == '\r' && bytes(b) == '\n' else bytes(b) == '\r'
+      val p = (2 to 64).find { p =>
+        bounds(p).exists(midLine) && bounds(p).exists(onTerminator) }.get
+      val f = s"$tmp/$name.txt"
+      Files.write(Paths.get(f), bytes)
+      MapReduce.write(spark, f, s"$tmp/dfs_$name", p)
+      assert(MapReduce.read(spark, s"$tmp/dfs_$name").collect().toSeq ==
+        spark.read.text(f).as[String].collect().toSeq, s"$name, $p chunks")
+    }
+  }
+
+  test("WRITE is one job with no shuffle: 1,000 lines into 7 chunks") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    val tmp = Files.createTempDirectory("graft-mr-jobs").toString
+    val src = s"$tmp/input.txt"
+    Files.write(Paths.get(src), (1 to 1000).map(i => s"w${i % 13},$i")
+      .mkString("", "\n", "\n").getBytes)
+    val group = "graft-mr-write-jobs"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicInteger
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); j.stageIds.foreach(stages.add(_))
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (stages.contains(s.stageInfo.stageId)) shuffled.addAndGet(
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "MapReduce.write")
+      try MapReduce.write(spark, src, s"$tmp/dfs", partitions = 7)
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1 && stages.size == 1,
+      s"${jobs.get} jobs, ${stages.size} stages")
+    assert(shuffled.get == 0L)
+    assert(new java.io.File(s"$tmp/dfs").list().filter(_.startsWith("part-")).sorted
+      .toSeq == (0 until 7).map(k => f"part-$k%05d"))
+  }
+
+  test("a graft-dfs overwrite clears WRITE's no-final-newline marker") {
+    val tmp = Files.createTempDirectory("graft-mr-marker").toString
+    val src = s"$tmp/open.txt"
+    Files.write(Paths.get(src), "a\nb".getBytes)
+    MapReduce.write(spark, src, s"$tmp/dfs", partitions = 2)
+    assert(MapReduce.lacksTrailingNewline(spark, s"$tmp/dfs"))
+    Seq("c").toDF("value").write.format("graft-dfs").mode("overwrite")
+      .save(s"$tmp/dfs")
+    assert(!MapReduce.lacksTrailingNewline(spark, s"$tmp/dfs"),
+      "a stale marker would make -r drop the new content's final newline")
   }
 
   test("CLI: -w/-r roundtrip in order, -mr pipe writes <name>_out") {
@@ -78,6 +144,23 @@ class MapReduceSpec extends SparkSpec {
     Files.write(Paths.get(few), "b\na\nc".getBytes)
     MapReduce.write(spark, few, s"$tmp/dfs2", partitions = 8)
     assert(MapReduce.read(spark, s"$tmp/dfs2").collect().toSeq == Seq("b", "a", "c"))
+    // exactly p chunks, part-00000 … part-00007, empty ones included
+    assert(new java.io.File(s"$tmp/dfs2").list().filter(_.startsWith("part-"))
+      .sorted.toSeq == (0 until 8).map(k => f"part-$k%05d"))
+    // empty source: p empty chunks, READ returns nothing
+    val empty = s"$tmp/empty.txt"
+    Files.write(Paths.get(empty), Array.emptyByteArray)
+    MapReduce.write(spark, empty, s"$tmp/dfs3", partitions = 3)
+    assert(MapReduce.read(spark, s"$tmp/dfs3").collect().isEmpty)
+    // a gzip source cannot be split by byte range: rejected up front
+    val gz = s"$tmp/lines.txt.gz"
+    val zout =
+      new java.util.zip.GZIPOutputStream(Files.newOutputStream(Paths.get(gz)))
+    try zout.write("x\ny\n".getBytes) finally zout.close()
+    val e = intercept[IllegalArgumentException] {
+      MapReduce.write(spark, gz, s"$tmp/dfs4", partitions = 2)
+    }
+    assert(e.getMessage.contains(gz), e.getMessage)
   }
 
   test("golden MR-parity: closure mapReduce == declarative groupBy count") {
