@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.mr.MapReduce
+import graft.sources.DfsTable
 
 /** The reference engine's user interface (`Client/client_v1.py:62-68,
   * 209-217`): three verbs over a DFS of named line-oriented datasets.
@@ -11,9 +13,9 @@ import graft.mr.MapReduce
   *                                              chunks under the dataset
   *                                              name (default: file base
   *                                              name, as the reference).
-  *  -r  <name> <localdest>                      READ: reassemble chunks in
+  *  -r  <name> <localdest>                      READ: concatenate chunks in
   *                                              manifest order into a
-  *                                              local file.
+  *                                              local file, byte for byte.
   *  -mr <mapperCmd> <reducerCmd> <name> [nPart] MAPREDUCE: external
   *                                              stdin→stdout executables
   *                                              via the pipe facade;
@@ -69,16 +71,26 @@ object Cli {
         MapReduce.write(spark, src, s"$dfs/$name", parts)
         println(s"written $src as '$name' ($parts chunks)")
       case "-r" :: name :: dest :: Nil =>
-        val lines = MapReduce.read(spark, s"$dfs/$name").collect()
-        // byte-for-byte reassembly: empty dataset → empty file; final
-        // newline only if WRITE didn't record its absence
-        val tail =
-          if (lines.isEmpty ||
-            MapReduce.lacksTrailingNewline(spark, s"$dfs/$name")) ""
-          else "\n"
-        java.nio.file.Files.write(java.nio.file.Paths.get(dest),
-          (lines.mkString("\n") + tail).getBytes("UTF-8"))
-        println(s"read '$name' (${lines.length} lines) into $dest")
+        val conf = spark.sparkContext.hadoopConfiguration
+        // listed before dest is opened: a name not in the DFS fails here
+        val chunks = DfsTable.chunks(s"$dfs/$name", conf)
+        val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(dest))
+        val buf = new Array[Byte](1 << 16)
+        var last = '\n'.toInt // last byte written; none reads as a newline
+        try for ((_, file, bytes) <- chunks if bytes > 0) {
+          val in = new Path(file).getFileSystem(conf).open(new Path(file))
+          try {
+            var n = in.read(buf)
+            // an unterminated chunk (WRITE without a final newline, then
+            // an append) must not join the next; nor \r with a leading \n
+            if (last != '\n' && (last != '\r' || buf(0) == '\n'))
+              out.write('\n')
+            while (n > 0) {
+              out.write(buf, 0, n); last = buf(n - 1) & 0xff; n = in.read(buf)
+            }
+          } finally in.close()
+        } finally out.close()
+        println(s"read '$name' (${chunks.size} chunks) into $dest")
       case "-mr" :: mapperCmd :: reducerCmd :: name :: rest if rest.size <= 1 =>
         val parts = rest.headOption.map(_.toInt)
           .getOrElse(spark.sparkContext.defaultParallelism.min(8))

@@ -9,7 +9,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DfsTable, SerializableHadoopConf}
+import graft.sources.SerializableHadoopConf
 
 /** MR-core parity facade (SURVEY.md §2.1–2.2, Phase 1): the reference
   * engine's three verbs — WRITE, READ, MAPREDUCE — re-expressed on Spark
@@ -30,8 +30,9 @@ import graft.sources.{DfsTable, SerializableHadoopConf}
   *    (`Worker/worker_v1.py:196-199`).
   *
   * The chunk store is the `graft-dfs` connector's: WRITE commits through
-  * it in one job, and READ is its scan, whose partition order is manifest
-  * order, so neither shuffles. That order holds for narrow consumers
+  * it in one job, each chunk a verbatim byte range of the source, and READ
+  * is its scan, whose partition order is manifest order, so neither
+  * shuffles. That order holds for narrow consumers
   * (`collect`, `toLocalIterator`, a `graft-dfs` write); a consumer that
   * shuffles and needs it reads `graft-dfs` and sorts on `chunk_id, line_no`.
   *
@@ -52,16 +53,16 @@ object MapReduce {
   }
 
   /** S1 WRITE: ingest a text file as `partitions` chunks `part-00000` …,
-    * committed through `graft-dfs` in ONE job with no shuffle. As Hadoop
-    * splits input, task k reads byte range `[k·len/p, (k+1)·len/p)` with
-    * Hadoop's `LineRecordReader`: each line goes to exactly one range (the
-    * one holding the byte before it), framed by `\n`, `\r\n` or `\r` as the
-    * text scan frames it, so chunk k is a contiguous run of lines and chunk
-    * order is line order. Contract: chunks are balanced by BYTES, not by
-    * line count as the reference's (`Client/client_v1.py:96-115`); a range
-    * that gets no line is an empty chunk. A source without a final newline
-    * is marked, so `Cli -r` reassembles it byte for byte. Compressed
-    * sources are rejected: a split cannot seek inside them.
+    * committed through `graft-dfs` in ONE job with no shuffle. Task k
+    * copies the source bytes `[b_k, b_{k+1})` VERBATIM, `b_k` being the
+    * offset of the first line Hadoop's `LineRecordReader` gives for split
+    * `[k·len/p, (k+1)·len/p)` (`b_0 = 0`, `b_p = len`): each line lands in
+    * its split's chunk, no cut falls inside a `\r\n`, and the chunks in
+    * order ARE the source, terminators, BOM and non-UTF-8 bytes included.
+    * Contract: chunks are balanced by BYTES, not by line count as the
+    * reference's (`Client/client_v1.py:96-115`); a split that reads no line
+    * is an empty chunk. Compressed sources are rejected: a split cannot
+    * seek inside them.
     */
   def write(spark: SparkSession, src: String, dfsDir: String,
       partitions: Int): Unit = {
@@ -69,55 +70,46 @@ object MapReduce {
     val path = new Path(src)
     require(new CompressionCodecFactory(conf).getCodec(path) == null,
       s"WRITE needs an uncompressed text source, got $src")
-    val fs = path.getFileSystem(conf)
-    val len = fs.getFileStatus(path).getLen
-    val endsWithNewline = len == 0 || { val in = fs.open(path)
-      try { in.seek(len - 1); in.read() == '\n' } finally in.close() }
+    val len = path.getFileSystem(conf).getFileStatus(path).getLen
     val hconf = new SerializableHadoopConf(conf)
-    val lines = spark.sparkContext.parallelize(0 until partitions, partitions)
+    val slices = spark.sparkContext.parallelize(0 until partitions, partitions)
       .flatMap { k =>
-        val (start, end) = (k * len / partitions, (k + 1) * len / partitions)
-        // an empty range gets no line (at 0 the reader would take line 0)
-        if (start == end) Iterator.empty else {
+        val ctx = new TaskAttemptContextImpl(hconf.value, new TaskAttemptID())
+        def lineStart(split: Long): Long = {
           val reader = new LineRecordReader()
-          TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
-          reader.initialize(new FileSplit(new Path(src), start, end - start,
-            Array.empty[String]),
-            new TaskAttemptContextImpl(hconf.value, new TaskAttemptID()))
-          Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
-            .map(_ => reader.getCurrentValue.copyBytes())
+          try {
+            reader.initialize(new FileSplit(path, split, len - split,
+              Array.empty[String]), ctx)
+            if (reader.nextKeyValue()) reader.getCurrentKey.get else len
+          } finally reader.close()
+        }
+        val (from, to) = (lineStart(k * len / partitions),
+          lineStart((k + 1) * len / partitions))
+        val in = path.getFileSystem(hconf.value).open(path)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        // rows of at most 1 MiB; the writer concatenates binary rows as is
+        (from until to by (1L << 20)).iterator.map { at =>
+          val bytes = new Array[Byte](math.min(1L << 20, to - at).toInt)
+          in.readFully(at, bytes)
+          bytes
         }
       }
-    // raw line bytes; the binary → string cast does not decode them
-    spark.createDataset(lines)(Encoders.BINARY)
-      .select(col("value").cast("string").as("value"))
+    spark.createDataset(slices)(Encoders.BINARY)
       .write.format("graft-dfs").mode("overwrite").save(dfsDir)
-    if (!endsWithNewline)
-      fs.create(new Path(dfsDir, DfsTable.NoTrailingNewline), true).close()
-  }
-
-  /** True iff `write` recorded that the dataset's source lacked a final
-    * newline. Any other `graft-dfs` overwrite (MR output included) clears
-    * the marker, so its lines read back newline-terminated.
-    */
-  private[graft] def lacksTrailingNewline(spark: SparkSession,
-      dfsDir: String): Boolean = {
-    val marker = new Path(dfsDir, DfsTable.NoTrailingNewline)
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(marker)
   }
 
   /** S2 READ: the DFS dir as one dataset of lines in MANIFEST ORDER —
     * part files in name order, lines within each file in file order —
     * matching the reference's chunk reassembly (`Client/client_v1.py:
-    * 172-175`), so a WRITE→READ roundtrip returns the original line
-    * sequence. This is the `graft-dfs` scan: one partition per chunk, in
-    * name order, each read front to back, so partition order IS manifest
-    * order and no sort or shuffle runs. The order holds for narrow
-    * consumers (`collect`, `toLocalIterator`, a `graft-dfs` write); a
-    * consumer that shuffles and still needs it reads `graft-dfs` and sorts
-    * on `chunk_id, line_no`. A missing dir fails at the first action, with
-    * the path in the error.
+    * 172-175`): a WRITE→READ roundtrip returns the text scan's lines, but
+    * keeps a leading UTF-8 BOM (`\uFEFF` starts the first line, as the
+    * reference's Python mapper sees it). This is the `graft-dfs` scan: one
+    * partition per chunk, in name order, each read front to back, so
+    * partition order IS manifest order and no sort or shuffle runs. The
+    * order holds for narrow consumers (`collect`, `toLocalIterator`, a
+    * `graft-dfs` write); a consumer that shuffles and still needs it reads
+    * `graft-dfs` and sorts on `chunk_id, line_no`. A missing dir fails at
+    * the first action, with the path in the error.
     */
   def read(spark: SparkSession, dfsDir: String): Dataset[String] = {
     import spark.implicits._

@@ -12,8 +12,9 @@ import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataC
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -45,9 +46,10 @@ class SerializableHadoopConf(@transient private var conf: Configuration)
   * its chunk list). The connector is the store's only writer
   * ([[graft.mr.MapReduce.write]] and `Cli -mr` output commit through it),
   * so it owns the format: visible chunks `part-%05d` whose NAME order is
-  * the manifest order, each holding contiguous text lines; the
-  * temp-then-rename commit ([[DfsBatchWrite]]); and the
-  * [[DfsTable.NoTrailingNewline]] marker.
+  * the manifest order, each holding contiguous text lines, and the
+  * temp-then-rename commit ([[DfsBatchWrite]]); no marker files. The
+  * `value` type picks the framing: BINARY rows are written verbatim
+  * (WRITE's source byte ranges), STRING rows as the line plus `\n`.
   *
   * Design for the cluster:
   *  - one InputPartition PER CHUNK — the reference's chunk-per-worker
@@ -77,11 +79,11 @@ class DfsDataSource extends TableProvider with DataSourceRegister {
       properties: util.Map[String, String]): Table = {
     val path = properties.get("path")
     require(path != null, "graft-dfs requires a store directory: .load(dir)")
-    new DfsTable(path)
+    new DfsTable(path, StructType(schema.map(_.copy(nullable = false))))
   }
 
-  // the WRITE path hands the incoming frame's (value)-only schema to
-  // getTable; reads always infer the full 3-column schema
+  // writes pass the frame's schema, so a binary `value` reaches the writer
+  // uncast (made non-null: Spark rejects null rows); reads infer `Schema`
   override def supportsExternalMetadata(): Boolean = true
 }
 
@@ -94,10 +96,9 @@ object DfsTable {
   val Schema: StructType = StructType(Seq(
     StructField("value", StringType, nullable = false)))
 
-  /** Marks that [[graft.mr.MapReduce.write]]'s source had NO final
-    * newline, for `Cli -r`; not a chunk (`_`), and an overwrite drops it.
-    */
-  val NoTrailingNewline = "_no_trailing_newline"
+  /** The active session's Hadoop conf, read on the driver. */
+  private[sources] def sessionConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
 
   private[sources] def metaCol(colName: String, dt: org.apache.spark.sql.types.DataType)
     : MetadataColumn = new MetadataColumn {
@@ -109,7 +110,7 @@ object DfsTable {
   }
 
   /** Visible files of the store dir in NAME order (= manifest order; the
-    * `_`/`.`-prefixed marker and checksum files are metadata, exactly
+    * `_`/`.`-prefixed temp and checksum files are metadata, exactly
     * Spark's own hidden-file convention). Returns (chunk id, path, bytes).
     */
   def chunks(dir: String, conf: Configuration): Seq[(Int, String, Long)] = {
@@ -124,10 +125,10 @@ object DfsTable {
   }
 }
 
-class DfsTable(path: String) extends Table with SupportsRead
-    with SupportsWrite with SupportsMetadataColumns {
+class DfsTable(path: String, dataSchema: StructType) extends Table
+    with SupportsRead with SupportsWrite with SupportsMetadataColumns {
   override def name(): String = s"graft-dfs:$path"
-  override def schema(): StructType = DfsTable.Schema
+  override def schema(): StructType = dataSchema
   override def metadataColumns(): Array[MetadataColumn] = Array(
     DfsTable.metaCol("chunk_id", IntegerType),
     DfsTable.metaCol("line_no", LongType))
@@ -135,7 +136,11 @@ class DfsTable(path: String) extends Table with SupportsRead
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-    : ScanBuilder = new DfsScanBuilder(path)
+    : ScanBuilder = {
+    require(dataSchema.map(f => f.name -> f.dataType) == Seq("value" -> StringType),
+      s"graft-dfs reads a single `value` string column; got $dataSchema")
+    new DfsScanBuilder(path)
+  }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new DfsWriteBuilder(path, info.schema())
 }
@@ -144,8 +149,7 @@ class DfsScanBuilder(path: String) extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
   private var required: StructType = DfsTable.Schema
-  private var chunkFilters: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
+  private var chunkFilters: Array[Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   /** Accept filters over the `chunk_id` placement column for CHUNK
@@ -154,31 +158,26 @@ class DfsScanBuilder(path: String) extends ScanBuilder
     * residual — Spark re-evaluates them post-scan, so pruning is purely
     * an optimization and unsupported shapes cost nothing.
     */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     chunkFilters = filters.filter(_.references.sameElements(
       Array("chunk_id")))
     filters
   }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    chunkFilters
+  override def pushedFilters(): Array[Filter] = chunkFilters
   override def build(): Scan = new DfsScan(path, required, chunkFilters)
 }
 
 class DfsScan(path: String, required: StructType,
-    chunkFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    chunkFilters: Array[Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics {
   // listed ONCE on the driver with the session's Hadoop conf
-  private lazy val files = DfsTable.chunks(path,
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+  private lazy val files = DfsTable.chunks(path, DfsTable.sessionConf)
 
   /** Planning-time evaluation of a pushed chunk_id predicate against a
     * concrete chunk id — conservative: anything unrecognized keeps the
     * chunk (Spark re-applies every filter post-scan).
     */
-  private def keeps(f: org.apache.spark.sql.sources.Filter, id: Int)
-      : Boolean = {
+  private def keeps(f: Filter, id: Int): Boolean = {
     import org.apache.spark.sql.sources._
     def v(x: Any): Option[Long] = x match {
       case n: Number => Some(n.longValue)
@@ -215,9 +214,7 @@ class DfsScan(path: String, required: StructType,
     kept.map { case (id, f, _) => DfsChunk(id, f): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DfsReaderFactory(required,
-      new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration))
+    new DfsReaderFactory(required, new SerializableHadoopConf(DfsTable.sessionConf))
 }
 
 /** One chunk = one Spark partition (serialized to executors). */
@@ -230,8 +227,9 @@ case class DfsChunk(chunkId: Int, file: String) extends InputPartition
   * only files named in COMMITTED task messages are renamed to their
   * final `part-%05d` slot (a speculative/retried attempt's file is
   * never referenced and is swept with the temp dir), so readers see
-  * each chunk exactly once. Input must carry a `value` string column
-  * (other columns rejected up front, not silently dropped).
+  * each chunk exactly once. Input must carry one `value` column, binary
+  * (written verbatim) or string (a line plus `\n`); other columns are
+  * rejected up front, not silently dropped.
   */
 class DfsWriteBuilder(path: String, schema: StructType)
     extends WriteBuilder with SupportsTruncate {
@@ -239,10 +237,12 @@ class DfsWriteBuilder(path: String, schema: StructType)
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = {
     require(schema.fieldNames.sameElements(Array("value"))
-      && schema.fields.head.dataType == StringType,
-      s"graft-dfs writes a single `value` string column; got $schema")
+      && Seq(StringType, BinaryType).contains(schema.fields.head.dataType),
+      s"graft-dfs writes a single `value` string or binary column; got $schema")
+    val lines = schema.fields.head.dataType == StringType
     new Write { write =>
-      override def toBatch: BatchWrite = new DfsBatchWrite(path, doTruncate)
+      override def toBatch: BatchWrite =
+        new DfsBatchWrite(path, doTruncate, lines)
     }
   }
 }
@@ -250,22 +250,19 @@ class DfsWriteBuilder(path: String, schema: StructType)
 case class DfsCommit(partitionId: Int, tempFile: String)
   extends WriterCommitMessage
 
-class DfsBatchWrite(dir: String, truncate: Boolean) extends BatchWrite {
+class DfsBatchWrite(dir: String, truncate: Boolean, lines: Boolean)
+    extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-    : DataWriterFactory = new DfsWriterFactory(dir,
-      new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration))
+    : DataWriterFactory = new DfsWriterFactory(dir, lines,
+      new SerializableHadoopConf(DfsTable.sessionConf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf =
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
+    val conf = DfsTable.sessionConf
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
-    if (truncate && fs.exists(p)) {
+    if (truncate && fs.exists(p))
       DfsTable.chunks(dir, conf).foreach { case (_, f, _) =>
         fs.delete(new Path(f), false) }
-      fs.delete(new Path(p, DfsTable.NoTrailingNewline), false)
-    }
     fs.mkdirs(p)
     // append lands AFTER the existing manifest (new chunks extend the
     // file, the reference's MR-output append at masterhandler.py:171)
@@ -283,15 +280,14 @@ class DfsBatchWrite(dir: String, truncate: Boolean) extends BatchWrite {
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf =
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    new Path(dir, "_temp").getFileSystem(conf)
-      .delete(new Path(dir, "_temp"), true)
+    val temp = new Path(dir, "_temp")
+    temp.getFileSystem(DfsTable.sessionConf).delete(temp, true)
   }
 }
 
-class DfsWriterFactory(dir: String, conf: SerializableHadoopConf)
-    extends DataWriterFactory {
+/** `lines`: string rows, each written plus `\n`; else binary rows, as is. */
+class DfsWriterFactory(dir: String, lines: Boolean,
+    conf: SerializableHadoopConf) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
     : DataWriter[InternalRow] = new DataWriter[InternalRow] {
     private val temp = new Path(dir, s"_temp/part-$partitionId-$taskId")
@@ -299,10 +295,9 @@ class DfsWriterFactory(dir: String, conf: SerializableHadoopConf)
     private val out = new java.io.BufferedOutputStream(fs.create(temp, true))
 
     // raw bytes, not decoded: the reader passes them through the same way
-    override def write(row: InternalRow): Unit = {
-      row.getUTF8String(0).writeTo(out)
-      out.write('\n')
-    }
+    override def write(row: InternalRow): Unit =
+      if (lines) { row.getUTF8String(0).writeTo(out); out.write('\n') }
+      else out.write(row.getBinary(0))
 
     override def commit(): WriterCommitMessage = {
       out.close()

@@ -167,6 +167,29 @@ class DfsSourceSpec extends SparkSpec {
       Seq((1, "x")).toDF("id", "value")
         .write.format("graft-dfs").mode("overwrite").save(dir)
     }
+    intercept[Exception] {
+      Seq(("x".getBytes(UTF_8), 1)).toDF("value", "id")
+        .write.format("graft-dfs").mode("overwrite").save(dir)
+    }
+  }
+
+  test("binary rows are written verbatim; reads keep value: string") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-dfs-bin").toString + "/store"
+    Seq("a\r", "b").map(_.getBytes(UTF_8)).toDF("value").coalesce(1)
+      .write.format("graft-dfs").mode("overwrite").save(dir)
+    assert(Files.readAllBytes(Paths.get(dir, "part-00000")).toSeq
+      == "a\rb".getBytes(UTF_8).toSeq)
+    val df = spark.read.format("graft-dfs").load(dir)
+    assert(df.schema == graft.sources.DfsTable.Schema)
+    assert(df.select("value", "chunk_id", "line_no").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      == Seq(("a", 0, 0L), ("b", 0, 1L)))
+    // a null row is rejected, as for string rows, not written as nothing
+    intercept[Exception] {
+      Seq[Array[Byte]](null).toDF("value")
+        .write.format("graft-dfs").mode("overwrite").save(dir)
+    }
   }
 
   test("undecodable bytes pass through a graft-dfs write and read raw") {

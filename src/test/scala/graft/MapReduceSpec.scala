@@ -1,11 +1,59 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 
 import graft.mr.MapReduce
 
 class MapReduceSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` with the CLI's DFS root (`<tmp>/dfs`) in a fresh temp dir. */
+  private def withDfs(body: Path => Unit): Unit = {
+    val tmp = Files.createTempDirectory("graft-cli")
+    sys.props("graft.dfs") = tmp.resolve("dfs").toString
+    try body(tmp) finally sys.props -= "graft.dfs"
+  }
+
+  /** `-w` of `bytes` as dataset `name`, then `-r` of it: the bytes back. */
+  private def cliRoundtrip(tmp: Path, name: String, bytes: Array[Byte])
+      : Array[Byte] = {
+    val src = tmp.resolve(s"$name.txt")
+    Files.write(src, bytes)
+    Cli.run(spark, Array("-w", src.toString))
+    val dest = tmp.resolve(s"$name.back")
+    Cli.run(spark, Array("-r", name, dest.toString))
+    Files.readAllBytes(dest)
+  }
+
+  /** Jobs, stages and shuffle bytes written of the Spark jobs `body` runs
+    * on this thread (a listener on a job group).
+    */
+  private def jobsOf(body: => Unit): (Int, Int, Long) = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    val group = "graft-mr-spec-jobs"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicInteger
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); j.stageIds.foreach(stages.add(_))
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (stages.contains(s.stageInfo.stageId)) shuffled.addAndGet(
+          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "MapReduceSpec")
+      try body finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, stages.size, shuffled.get)
+  }
 
   test("keyOf: first comma field; no comma → whole line") {
     assert(MapReduce.keyOf("a,b,c") == "a")
@@ -50,56 +98,100 @@ class MapReduceSpec extends SparkSpec {
   }
 
   test("WRITE is one job with no shuffle: 1,000 lines into 7 chunks") {
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-    import org.apache.spark.scheduler._
     val tmp = Files.createTempDirectory("graft-mr-jobs").toString
     val src = s"$tmp/input.txt"
     Files.write(Paths.get(src), (1 to 1000).map(i => s"w${i % 13},$i")
       .mkString("", "\n", "\n").getBytes)
-    val group = "graft-mr-write-jobs"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new AtomicInteger
-    val shuffled = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); j.stageIds.foreach(stages.add(_))
-        }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (stages.contains(s.stageInfo.stageId)) shuffled.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "MapReduce.write")
-      try MapReduce.write(spark, src, s"$tmp/dfs", partitions = 7)
-      finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 1 && stages.size == 1,
-      s"${jobs.get} jobs, ${stages.size} stages")
-    assert(shuffled.get == 0L)
+    val (jobs, stages, shuffled) =
+      jobsOf(MapReduce.write(spark, src, s"$tmp/dfs", partitions = 7))
+    assert(jobs == 1 && stages == 1, s"$jobs jobs, $stages stages")
+    assert(shuffled == 0L)
     assert(new java.io.File(s"$tmp/dfs").list().filter(_.startsWith("part-")).sorted
       .toSeq == (0 until 7).map(k => f"part-$k%05d"))
   }
 
-  test("a graft-dfs overwrite clears WRITE's no-final-newline marker") {
-    val tmp = Files.createTempDirectory("graft-mr-marker").toString
-    val src = s"$tmp/open.txt"
-    Files.write(Paths.get(src), "a\nb".getBytes)
-    MapReduce.write(spark, src, s"$tmp/dfs", partitions = 2)
-    assert(MapReduce.lacksTrailingNewline(spark, s"$tmp/dfs"))
-    Seq("c").toDF("value").write.format("graft-dfs").mode("overwrite")
-      .save(s"$tmp/dfs")
-    assert(!MapReduce.lacksTrailingNewline(spark, s"$tmp/dfs"),
-      "a stale marker would make -r drop the new content's final newline")
+  test("a graft-dfs overwrite after an unterminated WRITE: -r gives the new lines") {
+    withDfs { tmp =>
+      val src = tmp.resolve("open.txt")
+      Files.write(src, "a\nb".getBytes)
+      val store = s"${sys.props("graft.dfs")}/open"
+      MapReduce.write(spark, src.toString, store, partitions = 2)
+      // the chunks are all WRITE leaves (`.crc` files are Hadoop's checksums)
+      assert(new java.io.File(store).list().filterNot(_.startsWith(".")).sorted
+        .toSeq == Seq("part-00000", "part-00001"))
+      Seq("c").toDF("value").write.format("graft-dfs").mode("overwrite")
+        .save(store)
+      val dest = tmp.resolve("back.txt")
+      Cli.run(spark, Array("-r", "open", dest.toString))
+      assert(new String(Files.readAllBytes(dest), UTF_8) == "c\n")
+    }
+  }
+
+  test("a graft-dfs append after an unterminated WRITE: -r starts it on a new line") {
+    withDfs { tmp =>
+      val src = tmp.resolve("xy.txt")
+      Files.write(src, "x\ny".getBytes)
+      Cli.run(spark, Array("-w", src.toString))
+      Seq("z").toDF("value").write.format("graft-dfs").mode("append")
+        .save(s"${sys.props("graft.dfs")}/xy")
+      val dest = tmp.resolve("back.txt")
+      Cli.run(spark, Array("-r", "xy", dest.toString))
+      assert(new String(Files.readAllBytes(dest), UTF_8) == "x\ny\nz\n")
+      // after a bare \r, an appended empty line must not read as its \n
+      Files.write(src, "x\r".getBytes)
+      Cli.run(spark, Array("-w", src.toString))
+      Seq("").toDF("value").write.format("graft-dfs").mode("append")
+        .save(s"${sys.props("graft.dfs")}/xy")
+      Cli.run(spark, Array("-r", "xy", dest.toString))
+      assert(MapReduce.read(spark, s"${sys.props("graft.dfs")}/xy").collect()
+        .toSeq == Seq("x", ""))
+      assert(spark.read.text(dest.toString).as[String].collect().toSeq
+        == Seq("x", ""))
+    }
+  }
+
+  test("-w/-r of a CRLF-framed source gives the same bytes back") {
+    withDfs { tmp =>
+      val crlf = "a\r\nb\r\n".getBytes(UTF_8)
+      assert(cliRoundtrip(tmp, "crlf", crlf).toSeq == crlf.toSeq)
+    }
+  }
+
+  test("-w/-r keeps a leading BOM, and READ's first line starts with it") {
+    withDfs { tmp =>
+      val bom = Array(0xEF, 0xBB, 0xBF, 'q', '\n').map(_.toByte)
+      assert(cliRoundtrip(tmp, "bom", bom).toSeq == bom.toSeq)
+      assert(MapReduce.read(spark, s"${sys.props("graft.dfs")}/bom").collect()
+        .toSeq == Seq("\uFEFFq"))
+    }
+  }
+
+  test("-r of a name not in the DFS fails naming <dfs>/<name>, writes no file") {
+    withDfs { tmp =>
+      val dest = tmp.resolve("never.txt")
+      val e = intercept[Exception] {
+        Cli.run(spark, Array("-r", "nope", dest.toString))
+      }
+      assert(String.valueOf(e.getMessage)
+        .contains(s"${sys.props("graft.dfs")}/nope"), e.getMessage)
+      assert(!Files.exists(dest))
+    }
+  }
+
+  test("-r launches no Spark job") {
+    withDfs { tmp =>
+      val src = tmp.resolve("few.txt")
+      Files.write(src, "p\nq\r\nr".getBytes)
+      Cli.run(spark, Array("-w", src.toString))
+      val dest = tmp.resolve("back.txt")
+      val (jobs, _, _) = jobsOf(Cli.run(spark, Array("-r", "few", dest.toString)))
+      assert(jobs == 0)
+      assert(Files.readAllBytes(dest).sameElements(Files.readAllBytes(src)))
+    }
   }
 
   test("CLI: -w/-r roundtrip in order, -mr pipe writes <name>_out") {
-    val tmp = Files.createTempDirectory("graft-cli")
-    sys.props("graft.dfs") = tmp.resolve("dfs").toString
-    try {
+    withDfs { tmp =>
       val src = tmp.resolve("corpus.txt")
       val lines = Seq("b b", "a b", "c", "a b")
       // no trailing newline in the source: -r must roundtrip byte-for-byte
@@ -129,7 +221,7 @@ class MapReduceSpec extends SparkSpec {
         .collect()
       assert(out.sorted.sameElements(lines.sorted))
       intercept[IllegalArgumentException] { Cli.run(spark, Array("-x")) }
-    } finally sys.props -= "graft.dfs"
+    }
   }
 
   test("WRITE/READ edge cases: single line, and more partitions than lines") {
