@@ -7,11 +7,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{BloomAgg, BloomContains, DamerauLevenshtein, DeflateLen, FreqItemsAgg, InterleaveBits, JaroWinkler, MinHashSigAgg, NfcNormalize, OphSigAgg, SimHashSigAgg, TopKAgg, VectorDot, VectorCosine, VectorNorm, WeightedSimHashSigAgg}
 
-/** SparkSessionExtensions entry point: registers graft's custom Catalyst
-  * expressions as SQL functions, so `spark.sql("... vec_cosine(a,b) ...")`
-  * works cluster-wide via
+/** SparkSessionExtensions entry point, the one install path for graft's
+  * plan pieces: its custom Catalyst expressions as SQL functions (so
+  * `spark.sql("... vec_cosine(a,b) ...")` works), three conf-gated
+  * optimizer rules and the as-of join strategy. [[GraftSession]] loads it
+  * into every session it builds (and their `newSession()`s); a session
+  * built some other way needs
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  * For an already-running session use `GraftExtensions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -90,18 +92,15 @@ object GraftExtensions {
         (es: Seq[Expression]) =>
           graft.functions.Sum128(es(0)).toAggregateExpression()))
 
-  /** Constant int argument of a SQL call (e.g. the k in top_k(s, 3)). */
-  private def intArg(e: Expression): Int = e.eval(null) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(
-      s"expected a constant integer argument, got $other")
-  }
-
-  /** Register into a live session (tests, REPL). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (name, i, builder) =>
-      org.apache.spark.sql.graft.ColumnBridge
-        .registerFunction(spark, name, i, builder)
+  /** Constant int argument of a SQL call (e.g. the k in top_k(s, 3));
+    * a column reference can't be evaluated without a row, so it is
+    * rejected before `eval`.
+    */
+  private def intArg(e: Expression): Int =
+    (if (e.foldable) e.eval(null) else e.sql) match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(
+        s"expected a constant integer argument, got $other")
     }
 }

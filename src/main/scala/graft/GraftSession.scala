@@ -12,8 +12,11 @@ object GraftSession {
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Every conf key a session of `threads` local cores carries. */
+  /** Every conf key a session of `threads` local cores carries; the
+    * extensions key installs graft's SQL functions, rules and strategy.
+    */
   def conf(threads: Int): Map[String, String] = Map(
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName,
     "spark.sql.shuffle.partitions" -> threads.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false") ++ Tables.requiredConf

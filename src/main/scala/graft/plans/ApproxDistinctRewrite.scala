@@ -35,11 +35,11 @@ import org.apache.spark.sql.internal.SQLConf
   * discipline as [[RangeJoinRewrite]] and the q47/q112 percentile
   * pair.
   *
-  * Registered through [[graft.GraftExtensions]] (injectOptimizerRule)
-  * or `spark.experimental.extraOptimizations`. ApproxRewriteSpec pins:
-  * plan flips to approx_count_distinct (single- AND multi-column),
-  * estimates within rsd bounds of exact, NULL-tuple rows excluded as
-  * COUNT requires, plain COUNT untouched, rule inert without the conf.
+  * Installed by [[graft.GraftExtensions]], which [[graft.GraftSession]]
+  * loads. ApproxRewriteSpec pins: plan flips to approx_count_distinct
+  * (single- AND multi-column, FILTER clause kept), estimates within rsd
+  * bounds of exact, NULL-tuple rows excluded as COUNT requires, plain
+  * COUNT untouched, rule inert without the conf.
   */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 

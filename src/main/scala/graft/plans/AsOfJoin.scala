@@ -39,9 +39,8 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType,
   * never match, mirroring SQL equality. Time columns must be long-
   * backed (timestamp, long, int, date) on both sides.
   *
-  * Registered via `spark.experimental.extraStrategies` (the
-  * [[AsOfJoin.asof]] wrapper does it idempotently) or
-  * [[graft.GraftExtensions]] (injectPlannerStrategy). AsOfJoinSpec pins
+  * Installed by [[graft.GraftExtensions]], which [[graft.GraftSession]]
+  * loads; a session without it can't plan the node. AsOfJoinSpec pins
   * hand-computed matches, the exec + exchange + sort plan shape, and
   * equality with an O(n·m) reference join; the q176 driver entry pins
   * it against DuckDB's native ASOF JOIN.
@@ -213,10 +212,6 @@ object AsOfJoin {
       leftTimeCol: String, rightTimeCol: String,
       direction: AsOfDirection = AsOfBackward,
       tolerance: Option[Long] = None): DataFrame = {
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     // fresh exprIds on the right (Alias mints new ids) so a self-join's
     // sibling subtrees expose disjoint outputs
     val rightFresh = right.select(right.columns.map(c => col(c).as(c)): _*)
@@ -229,6 +224,6 @@ object AsOfJoin {
       keys.map(attr(lp, _)), keys.map(attr(rp, _)),
       attr(lp, leftTimeCol), attr(rp, rightTimeCol),
       direction, tolerance)
-    org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, node)
+    org.apache.spark.sql.graft.ColumnBridge.ofRows(left.sparkSession, node)
   }
 }

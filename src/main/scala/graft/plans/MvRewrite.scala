@@ -41,11 +41,11 @@ import org.apache.spark.sql.internal.SQLConf
   * in the last ulp from the direct scan (addition order) — the same
   * disclosed trade as every distributed float sum in this repo.
   *
-  * Registered via `spark.experimental.extraOptimizations` on an
-  * isolated session (the q233 pattern). MvRewriteSpec pins: plan flips
-  * to the MV scan, rewritten == exact, subset-key rollup, key-filter
-  * pushdown, refusal on non-key filters / DISTINCT / FILTER clauses /
-  * uncovered measures, inert unset.
+  * Installed by [[graft.GraftExtensions]], which [[graft.GraftSession]]
+  * loads; armed by conf on an isolated session (the q233 pattern).
+  * MvRewriteSpec pins: plan flips to the MV scan, rewritten == exact,
+  * subset-key rollup, key-filter pushdown, refusal on non-key filters /
+  * DISTINCT / FILTER clauses / uncovered measures, inert unset.
   */
 object MvRewrite extends Rule[LogicalPlan] {
 

@@ -37,10 +37,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * bounds) explode to zero buckets, matching the join's no-match
   * semantics.
   *
-  * Registered through `spark.experimental.extraOptimizations` or
-  * [[graft.GraftExtensions]] (injectOptimizerRule). RangeJoinRuleSpec
-  * pins: plan flips BNLJ → equi join, results equal the unrewritten
-  * join, rule inert without the conf / with an equi conjunct present.
+  * Installed by [[graft.GraftExtensions]], which [[graft.GraftSession]]
+  * loads. RangeJoinRuleSpec pins: plan flips BNLJ → equi join, results
+  * equal the unrewritten join, rule inert without the conf / with an
+  * equi conjunct present.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -131,16 +131,14 @@ object Relational {
     // same count-distinct aggregation a user would write, executed with
     // the conf-gated optimizer rule swapping the exact distinct for
     // HLL++ at rsd 0.02 — the q211 pattern of surfacing a primitive
-    // through a driver-visible query. The rule runs in a DEDICATED
-    // newSession(): experimental optimizations and SQLConf are
-    // session-state, so mutating the shared session would silently
-    // rewrite any exact COUNT(DISTINCT) planned concurrently on it —
-    // isolation, not restore-on-exit, is the correctness here.
+    // through a driver-visible query. The rule's conf is set in a
+    // DEDICATED newSession(): SQLConf is session state, so setting it on
+    // the shared session would silently rewrite any exact
+    // COUNT(DISTINCT) planned concurrently on it — isolation, not
+    // restore-on-exit, is the correctness here.
     "q233_approx_distinct" -> ((s, d) => {
       val rule = graft.plans.ApproxDistinctRewrite
       val iso = s.newSession()
-      iso.experimental.extraOptimizations =
-        iso.experimental.extraOptimizations :+ rule
       iso.conf.set(rule.RsdKey, "0.02")
       val out = Tables(iso, d, "events")
         .groupBy(col("event_type"))

@@ -516,17 +516,17 @@ object WarehouseOps {
       // rows-only: the MV query-rewrite rule (plans.MvRewrite) driven
       // end-to-end the way q233 drives ApproxDistinctRewrite: build a
       // rollup MV of lineitem keyed on (returnflag, linestatus), then
-      // run a plain aggregate against the FACT path on an isolated
-      // session with the rule armed — the entry requires the optimized
-      // plan to scan the MV (not the fact table) before returning the
-      // result. l_quantity is integral-valued, so the re-merged sums
-      // are bit-exact vs the direct scan; MvRewriteSpec pins equality,
-      // rollup, filter pushdown, every refusal path, and inertness.
+      // run a plain aggregate against the FACT path with the rule's
+      // confs set on an isolated session (SQLConf is session state, so
+      // the shared session's plans stay untouched) — the entry requires
+      // the optimized plan to scan the MV (not the fact table) before
+      // returning the result. l_quantity is integral-valued, so the
+      // re-merged sums are bit-exact vs the direct scan; MvRewriteSpec
+      // pins equality, rollup, filter pushdown, every refusal path, and
+      // inertness.
       "layout_mv_rewrite" -> ((s0, d) => {
         val rule = graft.plans.MvRewrite
         val iso = s0.newSession()
-        iso.experimental.extraOptimizations =
-          iso.experimental.extraOptimizations :+ rule
         val root = Files.createTempDirectory("graft_mvrw").toString
         val fact = s"$d/lineitem.parquet"
         iso.read.parquet(fact)

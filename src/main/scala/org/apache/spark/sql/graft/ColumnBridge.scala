@@ -13,15 +13,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register an expression builder into a LIVE session's function
-    * registry (SparkSessionExtensions only applies at session build).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-
   /** Build a DataFrame over a hand-constructed logical plan
     * (`Dataset.ofRows` is `private[sql]`; bridged for graft's custom
     * logical operators, e.g. the native as-of join).
@@ -31,18 +22,6 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Materialize the optimizer rules a SparkSessionExtensions instance
-    * would inject at session build (`buildOptimizerRules` is
-    * `private[sql]`; bridged for the extensions-injection specs — a
-    * second fully-built session can't coexist with the shared test
-    * fixture).
-    */
-  def optimizerRulesOf(ext: org.apache.spark.sql.SparkSessionExtensions,
-      session: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(session)
 
   /** Split a possibly direction-wrapped sort column into (value column,
     * ascending?). Spark 4 models `col.desc` as an `internal.SortOrder`

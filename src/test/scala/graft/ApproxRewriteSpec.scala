@@ -10,14 +10,9 @@ class ApproxRewriteSpec extends SparkSpec {
   private def events: DataFrame = Tables(spark, sf, "events")
 
   private def withRule[T](rsd: String)(body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ ApproxDistinctRewrite
     spark.conf.set(ApproxDistinctRewrite.RsdKey, rsd)
     try body
-    finally {
-      spark.conf.unset(ApproxDistinctRewrite.RsdKey)
-      spark.experimental.extraOptimizations = prev
-    }
+    finally spark.conf.unset(ApproxDistinctRewrite.RsdKey)
   }
 
   private def optimizedPlan(df: DataFrame): String =
@@ -90,45 +85,35 @@ class ApproxRewriteSpec extends SparkSpec {
   }
 
   test("FILTER clauses survive the rewrite") {
-    // The rule runs early when injected via GraftExtensions; through the
-    // late extraOptimizations hook Spark's RewriteDistinctAggregates has
-    // already expanded a FILTERed distinct. Pin the rule-level contract
-    // directly: apply to the analyzed plan (what the extensions hook
-    // sees) and execute the rewritten plan.
-    val q = spark.sql(
+    // the injected rule runs in the operator-optimization batch, before
+    // Spark's RewriteDistinctAggregates expands a FILTERed distinct
+    def q = spark.sql(
       s"""SELECT count(DISTINCT user_id)
          |  FILTER (WHERE event_type = 'view') AS nd
          |FROM parquet.`$sf/events.parquet`""".stripMargin)
     val exact = q.collect().head.getLong(0)
-    spark.conf.set(ApproxDistinctRewrite.RsdKey, "0.02")
-    try {
-      val rewritten = ApproxDistinctRewrite(q.queryExecution.analyzed)
-      val aggs = rewritten.expressions.flatMap(_.collect {
-        case ae: org.apache.spark.sql.catalyst.expressions.aggregate
-          .AggregateExpression => ae
-      })
-      val hll = aggs.filter(_.aggregateFunction.isInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .HyperLogLogPlusPlus])
+    withRule("0.02") {
+      val approx = q
+      val hll = approx.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect {
+          case ae: org.apache.spark.sql.catalyst.expressions.aggregate
+            .AggregateExpression if ae.aggregateFunction.isInstanceOf[
+              org.apache.spark.sql.catalyst.expressions.aggregate
+                .HyperLogLogPlusPlus] => ae
+        }))
       assert(hll.nonEmpty, "distinct count not rewritten to HLL++")
       assert(hll.forall(_.filter.isDefined), "FILTER clause dropped")
-      val got = org.apache.spark.sql.graft.ColumnBridge
-        .ofRows(spark, rewritten).collect().head.getLong(0)
+      val got = approx.collect().head.getLong(0)
       assert(math.abs(got - exact).toDouble <= exact * 0.1,
         s"approx $got vs exact $exact")
-    } finally spark.conf.unset(ApproxDistinctRewrite.RsdKey)
+    }
   }
 
   test("rejects non-numeric conf values without firing") {
-    spark.conf.set(ApproxDistinctRewrite.RsdKey, "not-a-number")
-    try {
-      val prev = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations = prev :+ ApproxDistinctRewrite
-      try {
-        val q = events.groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("nd"))
-        assert(!optimizedPlan(q).contains("approx_count_distinct"))
-      } finally spark.experimental.extraOptimizations = prev
-    } finally spark.conf.unset(ApproxDistinctRewrite.RsdKey)
+    withRule("not-a-number") {
+      val q = events.groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("nd"))
+      assert(!optimizedPlan(q).contains("approx_count_distinct"))
+    }
   }
 }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy}
+import graft.plans.{AsOfJoin, AsOfJoinExec}
 
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -190,14 +190,17 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("strategy registration is idempotent") {
-    val before = spark.experimental.extraStrategies
-      .count(_ == AsOfJoinStrategy)
-    val t = Seq((1L, 1L)).toDF("k", "t")
-    val q = Seq((1L, 1L, 1.0)).toDF("k", "qt", "p")
-    AsOfJoin.asof(t, q, Seq("k"), "t", "qt").collect()
-    AsOfJoin.asof(t, q, Seq("k"), "t", "qt").collect()
-    val after = spark.experimental.extraStrategies
-      .count(_ == AsOfJoinStrategy)
-    assert(after <= math.max(before, 1))
+    // GraftExtensions installs the strategy in every session GraftSession
+    // builds and in its newSession()s; asof itself installs nothing
+    Seq(spark, spark.newSession()).foreach { s =>
+      val t = s.createDataFrame(Seq((1L, 1L))).toDF("k", "t")
+      val q = s.createDataFrame(Seq((1L, 1L, 1.0))).toDF("k", "qt", "p")
+      val j = AsOfJoin.asof(t, q, Seq("k"), "t", "qt")
+      assert(j.queryExecution.sparkPlan.collectFirst {
+        case e: AsOfJoinExec => e
+      }.isDefined)
+      assert(j.collect().length === 1)
+      assert(s.experimental.extraStrategies.isEmpty)
+    }
   }
 }

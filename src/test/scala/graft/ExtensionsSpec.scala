@@ -1,9 +1,12 @@
 package graft
 
+/** The SQL functions GraftExtensions injects: the shared test session is
+  * built by GraftSession, which loads the extensions, so no spec
+  * registers anything.
+  */
 class ExtensionsSpec extends SparkSpec {
 
   test("vec_* kernels are usable from SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT vec_dot(a, b) AS d, vec_norm(a) AS n, vec_cosine(a, b) AS c
         |FROM VALUES (array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
@@ -15,7 +18,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("registered aggregate sketches are usable from pure SQL") {
-    GraftExtensions.register(spark)
     // top_k: 2 smallest (v, tag) structs over a group
     val tk = spark.sql(
       """SELECT top_k(struct(v, tag), 2) AS t
@@ -49,7 +51,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("sum128 is usable from pure SQL and matches the decimal sum") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT sum128(CAST(v AS BIGINT)) AS s128,
         |  SUM(CAST(v AS DECIMAL(38,0))) AS sdec
@@ -60,7 +61,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("registered vec_cosine on the embeddings table via pure SQL") {
-    GraftExtensions.register(spark)
     Tables(spark, sf, "embeddings").createOrReplaceTempView("emb")
     val n = spark.sql(
       """SELECT a.vec_id, b.vec_id, vec_cosine(a.embedding, b.embedding) AS c
@@ -71,8 +71,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(n == expected)
   }
 
+  test("a non-constant integer argument is an IllegalArgumentException") {
+    val e = intercept[IllegalArgumentException](spark.sql(
+      "SELECT top_k(struct(v), v) FROM VALUES (1) t(v)").collect())
+    assert(e.getMessage.contains("expected a constant integer argument"))
+  }
+
   test("registered text/layout kernels are usable from pure SQL") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT interleave_bits(3L, 5L) AS z,
         |       deflate_len('aaaaaaaaaaaaaaaaaaaaaaaa') AS dl""".stripMargin)

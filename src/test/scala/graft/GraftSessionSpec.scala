@@ -8,12 +8,15 @@ import scala.jdk.CollectionConverters._
 /** Pins the one session builder: the conf it sets, the shared test
   * session carrying that conf, and that no second builder appears in the
   * library (a copy that drifts from the first is how the mains once came
-  * to disagree on cores, UTC and the table-read keys).
+  * to disagree on cores, UTC and the table-read keys). Likewise plan
+  * extensions have one install path, the GraftExtensions that the conf
+  * loads.
   */
 class GraftSessionSpec extends SparkSpec {
 
   test("conf: UTC, UI off, shuffle partitions = cores, every required key") {
     val c = GraftSession.conf(7)
+    assert(c("spark.sql.extensions") === "graft.GraftExtensions")
     assert(c("spark.sql.session.timeZone") === "UTC")
     assert(c("spark.ui.enabled") === "false")
     assert(c("spark.sql.shuffle.partitions") === "7")
@@ -29,19 +32,30 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
-  test("SparkSession.builder is called only in GraftSession.scala") {
+  /** Files under src/main/scala whose text matches `re`. */
+  private def filesMatching(re: scala.util.matching.Regex): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root),
       s"no $root under ${Paths.get("").toAbsolutePath}")
-    val builder = """SparkSession\s*\.\s*[Bb]uilder""".r
     val walk = Files.walk(root)
-    val hits =
-      try walk.iterator.asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => builder
-          .findFirstIn(new String(Files.readAllBytes(p), UTF_8)).isDefined)
-        .map(p => root.relativize(p).toString).toList.sorted
-      finally walk.close()
-    assert(hits === List("graft/GraftSession.scala"))
+    try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => re
+        .findFirstIn(new String(Files.readAllBytes(p), UTF_8)).isDefined)
+      .map(p => root.relativize(p).toString).toList.sorted
+    finally walk.close()
+  }
+
+  test("SparkSession.builder is called only in GraftSession.scala") {
+    assert(filesMatching("""SparkSession\s*\.\s*[Bb]uilder""".r) ===
+      List("graft/GraftSession.scala"))
+  }
+
+  test("plan extensions install only through GraftExtensions") {
+    assert(filesMatching(
+      """inject(Function|OptimizerRule|PlannerStrategy)""".r) ===
+      List("graft/GraftExtensions.scala"))
+    assert(filesMatching(
+      """extraOptimizations|extraStrategies|registerFunction""".r) === Nil)
   }
 }

@@ -25,18 +25,13 @@ class MvRewriteSpec extends SparkSpec {
     dir
   }
 
-  private def withRule[T](body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite
-    spark.conf.set(MvRewrite.SourceKey, s"$root/base")
-    spark.conf.set(MvRewrite.TargetKey, s"$root/mv")
+  private def withRule[T](dir: String = root)(body: => T): T = {
+    spark.conf.set(MvRewrite.SourceKey, s"$dir/base")
+    spark.conf.set(MvRewrite.TargetKey, s"$dir/mv")
     spark.conf.set(MvRewrite.KeysKey, "k1,k2")
     try body
-    finally {
-      Seq(MvRewrite.SourceKey, MvRewrite.TargetKey, MvRewrite.KeysKey)
-        .foreach(spark.conf.unset)
-      spark.experimental.extraOptimizations = prev
-    }
+    finally Seq(MvRewrite.SourceKey, MvRewrite.TargetKey, MvRewrite.KeysKey)
+      .foreach(spark.conf.unset)
   }
 
   private def scans(df: DataFrame, path: String): Boolean =
@@ -59,7 +54,7 @@ class MvRewriteSpec extends SparkSpec {
 
   test("subset-key rollup flips to the MV scan and matches exact") {
     val exact = rows(rollup(fact))
-    withRule {
+    withRule() {
       val q = rollup(fact)
       assert(scans(q, s"$root/mv"), "expected the MV scan")
       assert(!scans(q, s"$root/base"), "fact scan should be gone")
@@ -71,7 +66,7 @@ class MvRewriteSpec extends SparkSpec {
     val exact = fact.filter(col("k2") === "F")
       .groupBy("k1", "k2").agg(sum("v").as("sv")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    withRule {
+    withRule() {
       val q = fact.filter(col("k2") === "F")
         .groupBy("k1", "k2").agg(sum("v").as("sv"))
       assert(scans(q, s"$root/mv"))
@@ -82,7 +77,7 @@ class MvRewriteSpec extends SparkSpec {
   }
 
   test("refusals: non-key filter, uncovered measure, distinct, FILTER, avg") {
-    withRule {
+    withRule() {
       // filter over a measure column — not answerable from the MV
       val f = fact.filter(col("v") > 3).groupBy("k1")
         .agg(sum("v").as("sv"))
@@ -108,7 +103,7 @@ class MvRewriteSpec extends SparkSpec {
   test("global aggregate (empty GROUP BY) keeps the fact scan") {
     // COUNT(*) over an empty fact is 0; SUM(cnt) over the empty MV would
     // be NULL — the rewrite must refuse so Count's contract holds
-    withRule {
+    withRule() {
       val g = fact.agg(count(lit(1)).as("n"), sum("v").as("sv"))
       assert(scans(g, s"$root/base") && !scans(g, s"$root/mv"))
       assert(g.collect().head.getLong(0) === 6L)
@@ -121,20 +116,11 @@ class MvRewriteSpec extends SparkSpec {
     empty.groupBy("k1", "k2")
       .agg(count(lit(1)).as("cnt"), sum("v").as("sum_v"))
       .write.mode("overwrite").parquet(s"$dir/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite
-    spark.conf.set(MvRewrite.SourceKey, s"$dir/base")
-    spark.conf.set(MvRewrite.TargetKey, s"$dir/mv")
-    spark.conf.set(MvRewrite.KeysKey, "k1,k2")
-    try {
+    withRule(dir) {
       val n = spark.read.parquet(s"$dir/base")
         .agg(count(lit(1)).as("n")).collect().head
       assert(!n.isNullAt(0) && n.getLong(0) === 0L,
         "COUNT(*) over an empty table must be 0, never NULL")
-    } finally {
-      Seq(MvRewrite.SourceKey, MvRewrite.TargetKey, MvRewrite.KeysKey)
-        .foreach(spark.conf.unset)
-      spark.experimental.extraOptimizations = prev
     }
   }
 
@@ -150,12 +136,7 @@ class MvRewriteSpec extends SparkSpec {
     spark.read.parquet(s"$dir/base").groupBy("k1")
       .agg(count(lit(1)).as("cnt"), sum("v").as("sum_v"))
       .write.mode("overwrite").parquet(s"$dir/mv")
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite
-    spark.conf.set(MvRewrite.SourceKey, s"$dir/base")
-    spark.conf.set(MvRewrite.TargetKey, s"$dir/mv")
-    spark.conf.set(MvRewrite.KeysKey, "k1,k2")
-    try {
+    withRule(dir) {
       val f2 = spark.read.parquet(s"$dir/base")
       // grouping on the phantom key: decline, stay on the fact scan
       val qg = f2.groupBy("k1", "k2").agg(sum("v").as("sv"))
@@ -170,20 +151,12 @@ class MvRewriteSpec extends SparkSpec {
       // the well-configured key still rewrites on the same session
       val ok = f2.groupBy("k1").agg(sum("v").as("sv"))
       assert(scans(ok, s"$dir/mv"), "present key must still rewrite")
-    } finally {
-      Seq(MvRewrite.SourceKey, MvRewrite.TargetKey, MvRewrite.KeysKey)
-        .foreach(spark.conf.unset)
-      spark.experimental.extraOptimizations = prev
     }
   }
 
   test("inert without the confs; result unchanged by registration") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ MvRewrite
-    try {
-      val q = rollup(fact)
-      assert(scans(q, s"$root/base") && !scans(q, s"$root/mv"))
-    } finally spark.experimental.extraOptimizations = prev
+    val q = rollup(fact)
+    assert(scans(q, s"$root/base") && !scans(q, s"$root/mv"))
   }
 
   test("the shipped layout_mv_rewrite entry rewrites and matches exact") {

@@ -18,14 +18,9 @@ class RangeJoinRuleSpec extends SparkSpec {
       (col("id") * 10 + 4).cast("double").as("hi"))
 
   private def withRule[T](width: String)(body: => T): T = {
-    val prevOpts = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prevOpts :+ RangeJoinRewrite
     spark.conf.set(RangeJoinRewrite.WidthKey, width)
     try body
-    finally {
-      spark.conf.unset(RangeJoinRewrite.WidthKey)
-      spark.experimental.extraOptimizations = prevOpts
-    }
+    finally spark.conf.unset(RangeJoinRewrite.WidthKey)
   }
 
   test("range join rewrites BNLJ to an equi join with identical results") {
@@ -84,14 +79,10 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rule stays inert without the conf and on equi joins") {
     // no conf: the pure range join must still be a nested loop
-    val prevOpts = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prevOpts :+ RangeJoinRewrite
-    try {
-      val j1 = points.join(ranges,
-        col("x") >= col("lo") && col("x") <= col("hi"))
-      assert(j1.queryExecution.executedPlan.toString
-        .contains("BroadcastNestedLoop"))
-    } finally spark.experimental.extraOptimizations = prevOpts
+    val j1 = points.join(ranges,
+      col("x") >= col("lo") && col("x") <= col("hi"))
+    assert(j1.queryExecution.executedPlan.toString
+      .contains("BroadcastNestedLoop"))
     // equi conjunct present: rule must not touch the join (the equality
     // already keys the shuffle)
     withRule("10") {
@@ -103,12 +94,12 @@ class RangeJoinRuleSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the rewrite as an optimizer rule") {
-    // a second fully-built session can't coexist with the shared
-    // fixture, so materialize the rules the extensions would inject
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val rules = org.apache.spark.sql.graft.ColumnBridge
-      .optimizerRulesOf(ext, spark)
-    assert(rules.contains(RangeJoinRewrite))
+    // the shared session is GraftSession's, which loads the extensions:
+    // setting the width conf alone arms the rewrite
+    withRule("10") {
+      val j = points.join(ranges,
+        col("x") >= col("lo") && col("x") <= col("hi"))
+      assert(j.queryExecution.optimizedPlan.toString.contains("__graft_rb"))
+    }
   }
 }

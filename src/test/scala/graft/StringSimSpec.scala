@@ -91,7 +91,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("kernels are usable from pure SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT dam_lev('ca', 'abc') AS d, jaro_winkler('a', 'ab') AS j").head()
     assert(r.getInt(0) == 2)
