@@ -5,7 +5,9 @@ import org.apache.spark.scheduler._
 /** Dev drill-down for named entries: each runs 3 reps through the noop
   * sink Bench times, and every Spark job a rep launches is printed with
   * its start offset, wall time and stage count — the Spark-UI jobs page
-  * for a headless box. `--explain` adds the formatted plan.
+  * for a headless box. Each rep also splits its jobs by layer: `eager`
+  * jobs start before the entry function returns its DataFrame, `exec`
+  * jobs during the noop write. `--explain` adds the formatted plan.
   *
   * Usage: runMain graft.Probe <sfDir> [--explain] <entry>...
   */
@@ -22,11 +24,18 @@ object Probe {
     require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(", ")}")
     val spark = GraftSession()
     Tables.names.foreach(t => Bench.warm(t)(Tables(spark, sfDir, t).count()))
+    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]
+    // jobs started per layer, keyed by the job group the rep runs under
+    val perLayer = new java.util.concurrent.ConcurrentHashMap[String, Int]
     @volatile var t0 = System.nanoTime()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.put(j.jobId, (System.nanoTime(), j.stageInfos.size))
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(perLayer.merge(_, 1, _ + _))
+      }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         Option(jobs.remove(j.jobId)).foreach { case (s, stages) =>
           println(f"  JOB ${j.jobId}%3d  +${(s - t0) / 1e9}%6.2f  " +
@@ -37,10 +46,18 @@ object Probe {
       val fn = SparkEntry.queries(n)
       val times = (1 to 3).map { r =>
         println(s"== $n rep $r ==")
+        perLayer.clear()
         t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try {
+          sc.setJobGroup("eager", n)
+          val df = fn(spark, sfDir)
+          sc.setJobGroup("exec", n)
+          df.write.format("noop").mode("overwrite").save()
+        } finally sc.clearJobGroup()
         val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let job-end events drain before the next banner
+        Thread.sleep(300) // let job events drain before the counts
+        println(s"  LAYERS eager_jobs=${perLayer.getOrDefault("eager", 0)} " +
+          s"exec_jobs=${perLayer.getOrDefault("exec", 0)}")
         secs
       }
       println(f"PROBE $n%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")

@@ -1,17 +1,22 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a near-dup pair list — the exact closure of
   * the pair graph into clusters (vs dedup_keep_min's one-pass single-link
   * approximation). Two strategies behind one signature:
   *
-  *  1. Min-label propagation: one equi-join + aggregation per round
-  *     (label = min over self and neighbors), converging in O(diameter)
-  *     rounds. Near-dup clusters are shallow quasi-cliques, so this is
-  *     the default path and almost always converges in a few rounds.
+  *  1. Min-label propagation as Pregel rounds [GraphX, OSDI'14]: every
+  *     vertex whose label dropped last round sends it to its neighbors,
+  *     each vertex keeps the min of its label and the messages it got,
+  *     converging in O(diameter) rounds. Near-dup clusters are shallow
+  *     quasi-cliques, so this is the default path and almost always
+  *     converges in a few rounds.
   *  2. Alternating large-star/small-star [Kiveris et al., "Connected
   *     Components in MapReduce and Beyond", SoCC'14]: O(log d) rounds on
   *     deep chain-shaped graphs. Chosen automatically when propagation
@@ -19,16 +24,25 @@ import org.apache.spark.sql.graft.ColumnBridge
   *     escalation path for pathological deep clusters at 100 TB.
   *
   * Iteration discipline (the 100 TB concerns for any driver loop):
-  *  - each round's state is eagerly localCheckpoint'ed, so lineage is
-  *    truncated every round — the physical plan stays O(1) in the
-  *    iteration count instead of nesting joins;
-  *  - the PREVIOUS round's checkpoint blocks are unpersisted as soon as
-  *    the next round is materialized, so at most two state snapshots are
-  *    ever live (round 2 retained every round's blocks until session
-  *    end). Cluster runs should swap localCheckpoint for a reliable
+  *  - propagation runs on RDDs that share one hash partitioner
+  *    (`spark.sql.shuffle.partitions` partitions): the adjacency lists are
+  *    partitioned once and persisted, and the labels stay on the same
+  *    partitioner, so the message join and the label join are narrow.
+  *    The one shuffle per round is the message combine
+  *    (`reduceByKey(min)`), and it carries only the ACTIVE set's
+  *    messages — vertices whose label dropped last round — so late
+  *    rounds ship the frontier, not the graph;
+  *  - each round is exactly ONE Spark job: the count of vertices whose
+  *    label dropped is both the convergence check and the action that
+  *    materializes the round's labels. No SQL planning runs between
+  *    rounds;
+  *  - each round's labels are localCheckpoint'ed, so lineage is
+  *    truncated every round — the job's DAG stays O(1) in the iteration
+  *    count instead of nesting joins;
+  *  - the PREVIOUS round's snapshot is unpersisted as soon as the next
+  *    round is materialized, so at most two label snapshots are ever
+  *    live. Cluster runs should swap localCheckpoint for a reliable
   *    `checkpoint` dir — local checkpoints don't survive executor loss;
-  *  - the convergence check is a filter over the just-materialized
-  *    blocks, not a separate recomputation — one real job per round;
   *  - non-convergence at maxIter is loudly logged instead of silently
   *    returning partially-propagated labels.
   */
@@ -39,49 +53,52 @@ object Components {
   /** Propagation rounds before escalating to large-star/small-star. */
   private[graft] val PropagationThreshold = 8
 
-  /** edges: two long columns (a, b). Returns (node, component) for every
-    * node appearing in an edge, component = min node id of its connected
+  /** edges: two long columns (a, b). Returns (node, comp) for every
+    * node appearing in an edge, comp = min node id of its connected
     * component. `maxIter` bounds the TOTAL rounds across both phases.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val part = new HashPartitioner(math.max(1,
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt))
     val Seq(ca, cb) = edges.columns.toSeq.take(2).map(col)
-    // bidirectional neighbor list — cached: every propagation round joins
-    // against it; released before returning.
-    val nbrs = edges.select(ca.as("node"), cb.as("nbr"))
-      .union(edges.select(cb.as("node"), ca.as("nbr")))
-      .distinct()
-      .cache()
-    var labels = nbrs.select(col("node")).distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint(true)
-    var prev: DataFrame = null
+    // bidirectional adjacency lists keyed by node — every round joins
+    // against them; released before returning
+    val adj = edges.select(ca, cb).rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator(a -> b, b -> a)
+      }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // (node, (label, dropped this round)); round 0: every node is its
+    // own label and every node is active
+    var state: RDD[(Long, (Long, Boolean))] = adj.mapPartitions(
+      _.map { case (v, _) => (v, (v, true)) }, preservesPartitioning = true)
     var iter = 0
     var converged = false
     val propRounds = math.min(PropagationThreshold, maxIter)
     while (iter < propRounds && !converged) {
-      // the snapshot superseded LAST round is freed before this round
-      // materializes a new one → at most two live at any instant
-      if (prev != null) { ColumnBridge.unpersistCheckpoint(prev); prev = null }
-      val nbrComp = nbrs
-        .join(labels.select(col("node").as("nbr"), col("comp").as("nbr_comp")),
-          "nbr")
-        .groupBy(col("node")).agg(min(col("nbr_comp")).as("min_nbr_comp"))
-      val next = labels.select(col("node"), col("comp").as("old"))
-        .join(nbrComp, Seq("node"), "left")
-        .select(col("node"), col("old"),
-          least(col("old"), coalesce(col("min_nbr_comp"), col("old")))
-            .as("comp"))
-        .localCheckpoint(true)
-      converged =
-        next.filter(col("comp") =!= col("old")).limit(1).count() == 0L
-      prev = labels
-      labels = next.select(col("node"), col("comp"))
+      val msgs = state.filter(_._2._2).join(adj)
+        .flatMap { case (_, ((l, _), ns)) => ns.iterator.map(_ -> l) }
+        .reduceByKey(part, math.min(_, _))
+      val next = state.leftOuterJoin(msgs).mapValues {
+        case ((old, _), Some(m)) if m < old => (m, true)
+        case ((old, _), _) => (old, false)
+      }.localCheckpoint()
+      converged = next.filter(_._2._2).count() == 0L
+      // the snapshot this round superseded is freed once the new one is
+      // materialized → at most two live at any instant
+      state.unpersist(blocking = false)
+      state = next
       iter += 1
     }
-    if (prev != null) ColumnBridge.unpersistCheckpoint(prev)
-    if (converged) { nbrs.unpersist(); return labels }
+    adj.unpersist(blocking = false)
+    def labels = state.map { case (v, (l, _)) => (v, l) }.toDF("node", "comp")
+    if (converged) return labels
     if (iter >= maxIter) {
-      nbrs.unpersist()
       log.warn(s"connectedComponents: no convergence after $maxIter " +
         "iterations — labels may be partially propagated; raise maxIter")
       return labels
@@ -92,8 +109,7 @@ object Components {
     // so restarting costs less than crawling on).
     log.info(s"connectedComponents: not converged after $iter propagation " +
       "rounds — escalating to large-star/small-star")
-    ColumnBridge.unpersistCheckpoint(labels)
-    nbrs.unpersist()
+    state.unpersist(blocking = false)
     starComponents(edges, maxIter - iter)
   }
 

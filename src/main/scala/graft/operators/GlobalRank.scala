@@ -292,10 +292,19 @@ object GlobalRank {
     * row's own weight). Same determinism contract (unique key tuples).
     */
   def withPrefixSum(df: DataFrame, sumCol: String, weight: Column,
-      keys: Column*): DataFrame = {
+      keys: Column*): DataFrame =
+    withPrefixSumN(df, sumCol, weight, None, keys: _*)
+
+  /** [[withPrefixSum]] with a caller-known row count — skips the
+    * machinery's own count job (exactQuantilesByRank counts its class
+    * table in the same aggregate that sums its weights).
+    */
+  private[graft] def withPrefixSumN(df: DataFrame, sumCol: String,
+      weight: Column, knownCount: Option[Long], keys: Column*): DataFrame = {
     val w = weight.cast("long")
     val parts: Seq[(Column, Boolean)] = keys.map(ColumnBridge.splitSortOrder)
-    val bucketed = df.withColumn("__gp_pid", bucketExpr(df, parts))
+    val bucketed = df.withColumn("__gp_pid",
+      bucketExpr(df, parts, knownCount))
     val local = bucketed.withColumn("__gp_lps",
       coalesce(
         sum(w).over(

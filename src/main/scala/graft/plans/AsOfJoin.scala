@@ -212,6 +212,17 @@ object AsOfJoin {
       leftTimeCol: String, rightTimeCol: String,
       direction: AsOfDirection = AsOfBackward,
       tolerance: Option[Long] = None): DataFrame = {
+    // the node plans only through AsOfJoinStrategy; without it Spark
+    // fails at planning with an [INTERNAL_ERROR] that names neither the
+    // node nor the missing conf
+    val planner = left.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner
+    if (!planner.strategies.contains(AsOfJoinStrategy))
+      throw new IllegalStateException("AsOfJoin.asof: this session has " +
+        "no as-of join strategy; build it with " +
+        s"spark.sql.extensions=${classOf[graft.GraftExtensions].getName} " +
+        "(GraftSession does)")
     // fresh exprIds on the right (Alias mints new ids) so a self-join's
     // sibling subtrees expose disjoint outputs
     val rightFresh = right.select(right.columns.map(c => col(c).as(c)): _*)

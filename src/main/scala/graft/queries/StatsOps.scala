@@ -176,10 +176,11 @@ object StatsOps {
     // empty-input require (or any downstream failure) throws — the
     // checkpoint otherwise leaks executor storage for the session
     try {
-      val n = cls.agg(sum(col("cnt"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
+      // n and the class count in one aggregate: the prefix pass below
+      // takes the class count instead of counting the table again
+      val tot = cls.agg(sum(col("cnt")), count(lit(1))).head()
+      val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
+      val classCount = tot.getLong(1)
       require(n > 0, "exactQuantilesByRank needs a non-empty input")
       // 0-based fractional positions — Spark Percentile / DuckDB
       // quantile_cont both interpolate at pos = p · (n − 1)
@@ -188,7 +189,7 @@ object StatsOps {
         .flatMap(pos => Seq(math.floor(pos).toLong + 1,
           math.ceil(pos).toLong + 1)).distinct
       val pre = graft.operators.GlobalRank
-        .withPrefixSum(cls, "c", col("cnt"), col("v"))
+        .withPrefixSumN(cls, "c", col("cnt"), Some(classCount), col("v"))
       // the class holding rank r satisfies c < r ≤ c + cnt
       val hit = wanted.map(r =>
         col("c") < lit(r) && lit(r) <= col("c") + col("cnt"))

@@ -203,4 +203,25 @@ class AsOfJoinSpec extends SparkSpec {
       assert(s.experimental.extraStrategies.isEmpty)
     }
   }
+
+  test("asof without GraftExtensions fails early, naming the conf") {
+    import org.apache.spark.sql.classic
+    // a session over the same context built with NO extensions (the
+    // constructor taking them is private; GraftSession always loads them)
+    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
+      .find(_.getParameterCount == 6).get
+    ctor.setAccessible(true)
+    val bare = ctor.newInstance(spark.sparkContext,
+      Some(spark.asInstanceOf[classic.SparkSession].sharedState), None,
+      new org.apache.spark.sql.SparkSessionExtensions,
+      Map.empty[String, String], Map.empty[String, String])
+      .asInstanceOf[classic.SparkSession]
+    val t = bare.createDataFrame(Seq((1L, 1L))).toDF("k", "t")
+    val q = bare.createDataFrame(Seq((1L, 1L, 1.0))).toDF("k", "qt", "p")
+    val e = intercept[IllegalStateException] {
+      AsOfJoin.asof(t, q, Seq("k"), "t", "qt")
+    }
+    assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+      e.getMessage)
+  }
 }

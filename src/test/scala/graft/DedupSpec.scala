@@ -244,6 +244,41 @@ class DedupSpec extends SparkSpec {
     val partial = graft.operators.Components.connectedComponents(edges, maxIter = 1)
       .collect()
     assert(partial.length == 8)
+    // one round: every node holds the min of itself and its neighbors
+    assert(partial.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 8L).map(i => i -> math.max(1L, i - 1)).toMap)
+  }
+
+  test("components match union-find on seeded random graphs") {
+    import spark.implicits._
+    Seq(3, 11, 29).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def node() = rnd.nextInt(50).toLong
+      val random = Seq.fill(40)((node(), node()))
+      val es = random ++
+        random.take(10) ++                      // duplicate edges
+        random.take(10).map(_.swap) ++          // both orientations
+        Seq((7L, 7L), (90L, 90L)) ++            // self-loops, one alone
+        Seq.fill(12)((100L, node())) ++         // a hub
+        Seq((200L, 201L), (203L, 202L))         // isolated pairs
+      val got = graft.operators.Components
+        .connectedComponents(es.toDF("a", "b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFind(es), s"seed $seed: components != union-find")
+    }
+  }
+
+  test("components propagation runs one Spark job per round") {
+    import spark.implicits._
+    // path 1-2-3-4, diameter 3: labels drop in rounds 1-3 and round 4
+    // confirms convergence (only node 4 is still active there)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val (jobs, _, _) = jobsOf {
+      labels = graft.operators.Components.connectedComponents(edges)
+    }
+    assert(jobs == 4, s"4 rounds should launch 4 jobs, got $jobs")
+    assert(labels.collect().map(_.getLong(1)).toSet == Set(1L))
   }
 
   test("jaccard values are exact rationals in [0.5, 1]") {

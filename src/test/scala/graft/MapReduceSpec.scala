@@ -26,35 +26,6 @@ class MapReduceSpec extends SparkSpec {
     Files.readAllBytes(dest)
   }
 
-  /** Jobs, stages and shuffle bytes written of the Spark jobs `body` runs
-    * on this thread (a listener on a job group).
-    */
-  private def jobsOf(body: => Unit): (Int, Int, Long) = {
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-    import org.apache.spark.scheduler._
-    val group = "graft-mr-spec-jobs"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new AtomicInteger
-    val shuffled = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.incrementAndGet(); j.stageIds.foreach(stages.add(_))
-        }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (stages.contains(s.stageInfo.stageId)) shuffled.addAndGet(
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "MapReduceSpec")
-      try body finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    (jobs.get, stages.size, shuffled.get)
-  }
-
   test("keyOf: first comma field; no comma → whole line") {
     assert(MapReduce.keyOf("a,b,c") == "a")
     assert(MapReduce.keyOf("nocomma") == "nocomma")

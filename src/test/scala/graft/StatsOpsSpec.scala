@@ -72,6 +72,18 @@ class StatsOpsSpec extends SparkSpec {
     assert(b2._1 == b2._2, s"crafted diverged: ${b2._1} vs ${b2._2}")
   }
 
+  test("rank fill counts its class table once") {
+    val li = Tables(spark, sf, "lineitem")
+    li.count()
+    val (jobs, _, _) = jobsOf(StatsOps.exactQuantilesByRank(li,
+      "l_extendedprice", (1 until StatsOps.EqDepthBuckets)
+        .map(_.toDouble / StatsOps.EqDepthBuckets)))
+    // class-table pin, one sum-and-count aggregate, the boundary sample
+    // and the wanted-rank collect, AQE stage jobs included: the class
+    // table is counted once
+    assert(jobs == 10, s"rank fill ran $jobs jobs")
+  }
+
   test("rank-based per-group percentiles are bit-identical to q47") {
     def run(name: String) = SparkEntry.queries(name)(spark, sf).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
