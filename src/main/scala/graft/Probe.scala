@@ -7,7 +7,9 @@ import org.apache.spark.scheduler._
   * its start offset, wall time and stage count — the Spark-UI jobs page
   * for a headless box. Each rep also splits its jobs by layer: `eager`
   * jobs start before the entry function returns its DataFrame, `exec`
-  * jobs during the noop write. `--explain` adds the formatted plan.
+  * jobs during the noop write. The `PROBE` summary line carries every
+  * rep's seconds and eager/exec job counts. `--explain` adds the
+  * formatted plan.
   *
   * Usage: runMain graft.Probe <sfDir> [--explain] <entry>...
   */
@@ -44,7 +46,7 @@ object Probe {
     })
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      val times = (1 to 3).map { r =>
+      val reps = (1 to 3).map { r =>
         println(s"== $n rep $r ==")
         perLayer.clear()
         t0 = System.nanoTime()
@@ -55,12 +57,15 @@ object Probe {
           df.write.format("noop").mode("overwrite").save()
         } finally sc.clearJobGroup()
         val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let job events drain before the counts
-        println(s"  LAYERS eager_jobs=${perLayer.getOrDefault("eager", 0)} " +
-          s"exec_jobs=${perLayer.getOrDefault("exec", 0)}")
-        secs
+        org.apache.spark.ListenerDrain(sc) // every job event delivered
+        val eager = perLayer.getOrDefault("eager", 0)
+        val exec = perLayer.getOrDefault("exec", 0)
+        println(s"  LAYERS eager_jobs=$eager exec_jobs=$exec")
+        (secs, eager, exec)
       }
-      println(f"PROBE $n%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
+      println(f"PROBE $n%-28s ${reps.map(r => f"${r._1}%.2f").mkString(" ")}" +
+        s"  eager_jobs=${reps.map(_._2).mkString(",")}" +
+        s" exec_jobs=${reps.map(_._3).mkString(",")}")
       if (flags.contains("--explain")) fn(spark, sfDir).explain("formatted")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, lit, sum, when}
 
@@ -43,13 +43,21 @@ object VersionedTable {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Committed version numbers, ascending (empty for a fresh root). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
+  /** The commit markers, ascending by version (empty for a fresh root):
+    * one listing of `_commits`, from which every version view derives.
+    */
+  private def commits(spark: SparkSession, root: String)
+      : Seq[(Long, FileStatus)] = {
     val dir = new Path(root, "_commits")
     val f = fs(spark, root)
     if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName.toLong).sorted.toSeq
+    else f.listStatus(dir).map(s => (s.getPath.getName.toLong, s))
+      .sortBy(_._1).toSeq
   }
+
+  /** Committed version numbers, ascending (empty for a fresh root). */
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    commits(spark, root).map(_._1)
 
   /** Committed versions with their fragment flag, ascending. A FULL
     * version's marker is an empty file (the original layout — every
@@ -57,27 +65,15 @@ object VersionedTable {
     * one byte. The flag lives in the marker itself so it is committed
     * atomically with the version.
     */
-  def versionMeta(spark: SparkSession, root: String): Seq[(Long, Boolean)] = {
-    val dir = new Path(root, "_commits")
-    val f = fs(spark, root)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir)
-      .map(s => (s.getPath.getName.toLong, s.getLen > 0L))
-      .sortBy(_._1).toSeq
-  }
+  def versionMeta(spark: SparkSession, root: String): Seq[(Long, Boolean)] =
+    commits(spark, root).map { case (v, s) => (v, s.getLen > 0L) }
 
   /** Commit wall-clock instants (marker modification times), ascending
     * by version: (version, epochMillis). The marker IS the commit, so
     * its mtime is the commit time — no separate metadata write.
     */
-  def versionTimes(spark: SparkSession, root: String): Seq[(Long, Long)] = {
-    val dir = new Path(root, "_commits")
-    val f = fs(spark, root)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir)
-      .map(s => (s.getPath.getName.toLong, s.getModificationTime))
-      .sortBy(_._1).toSeq
-  }
+  def versionTimes(spark: SparkSession, root: String): Seq[(Long, Long)] =
+    commits(spark, root).map { case (v, s) => (v, s.getModificationTime) }
 
   /** Timestamp time travel (Delta's `AS OF TIMESTAMP` rule): the newest
     * version committed at or before `tsMillis`. Versions are monotonic,

@@ -149,15 +149,36 @@ object StatsOps {
     bucketize(df, valueCol, exactQuantilesByRank(df, valueCol,
       (1 until EqDepthBuckets).map(_.toDouble / EqDepthBuckets)))
 
+  /** Spark Percentile's interpolation over the order statistics of `n`
+    * values: quantile p sits at the 0-based position pos = p · (n − 1)
+    * (DuckDB's quantile_cont agrees), so it needs the values at the
+    * 1-based ranks floor(pos) + 1 and ceil(pos) + 1 ([[wanted]]), and
+    * [[values]] assembles `lo + (hi − lo) · frac` rounded to 4 dp
+    * HALF_UP via BigDecimal.valueOf (the shortest decimal
+    * representation Spark's round(double, d) rounds, NOT the exact
+    * binary expansion).
+    */
+  private final case class RankQuantiles(n: Long, ps: Seq[Double]) {
+    private val positions = ps.map(p => p * (n - 1))
+    val wanted: Seq[Long] = positions
+      .flatMap(pos => Seq(math.floor(pos).toLong + 1,
+        math.ceil(pos).toLong + 1)).distinct
+    def values(atRank: Long => Double): Seq[Double] = positions.map { pos =>
+      val lo = atRank(math.floor(pos).toLong + 1)
+      val hi = atRank(math.ceil(pos).toLong + 1)
+      BigDecimal(java.math.BigDecimal.valueOf(
+          lo + (hi - lo) * (pos - math.floor(pos))))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+  }
+
   /** Exact percentiles of a double column via GLOBAL RANK — the shared
     * machinery behind the rank twins (stats_eqdepth_rank /
     * stats_winsorize_rank): one range-partitioned rank pass, a narrow
     * filter to the ≤ 2·|ps| order-statistic ranks, and Spark
-    * Percentile's own interpolation `lower + (higher − lower) · frac`
-    * assembled on the driver — then the same 4-dp HALF_UP rounding the
-    * buffer forms apply, via BigDecimal.valueOf (the shortest decimal
-    * representation Spark's round(double, d) rounds, NOT the exact
-    * binary expansion). Bit-identical to
+    * Percentile's own interpolation assembled on the driver with the
+    * 4-dp rounding the buffer forms apply ([[RankQuantiles]]).
+    * Bit-identical to
     * `round(percentile(v, ps), 4)` with NO corpus-sized value-count
     * buffer anywhere. Ties need no tiebreaker: rows holding equal v are
     * interchangeable at any rank, so rank→VALUE is well-defined.
@@ -182,31 +203,18 @@ object StatsOps {
       val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
       val classCount = tot.getLong(1)
       require(n > 0, "exactQuantilesByRank needs a non-empty input")
-      // 0-based fractional positions — Spark Percentile / DuckDB
-      // quantile_cont both interpolate at pos = p · (n − 1)
-      val positions = ps.map(p => p * (n - 1))
-      val wanted = positions
-        .flatMap(pos => Seq(math.floor(pos).toLong + 1,
-          math.ceil(pos).toLong + 1)).distinct
+      val q = RankQuantiles(n, ps)
       val pre = graft.operators.GlobalRank
         .withPrefixSumN(cls, "c", col("cnt"), Some(classCount), col("v"))
       // the class holding rank r satisfies c < r ≤ c + cnt
-      val hit = wanted.map(r =>
+      val hit = q.wanted.map(r =>
         col("c") < lit(r) && lit(r) <= col("c") + col("cnt"))
         .reduce(_ || _)
       val classes = pre.filter(hit)
         .select(col("v"), col("c"), col("cnt")).collect()
         .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-      val atRank = wanted.map { r =>
-        r -> classes.find { case (_, c, cnt) => c < r && r <= c + cnt }.get._1
-      }.toMap
-      positions.map { pos =>
-        val lo = atRank(math.floor(pos).toLong + 1)
-        val hi = atRank(math.ceil(pos).toLong + 1)
-        BigDecimal(java.math.BigDecimal.valueOf(
-            lo + (hi - lo) * (pos - math.floor(pos))))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
+      q.values(r =>
+        classes.find { case (_, c, cnt) => c < r && r <= c + cnt }.get._1)
     } finally org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(cls)
   }
 
@@ -250,26 +258,16 @@ object StatsOps {
       val pre = graft.operators.GlobalRank
         .withPrefixSumInGroupsKnownTotals(cls, "c", col("cnt"), col("g"),
           sortedTotals, col("v"))
-      def posOf(n: Long) = ps.map(p => p * (n - 1))
-      val wantedDf = counts.toSeq.flatMap { case (g, n) =>
-        posOf(n).flatMap(pos => Seq(math.floor(pos).toLong + 1,
-          math.ceil(pos).toLong + 1)).distinct.map(g -> _)
-      }.toDF("wg", "rk")
+      val qs = counts.map { case (g, n) => g -> RankQuantiles(n, ps) }
+      val wantedDf = qs.toSeq.flatMap { case (g, q) => q.wanted.map(g -> _) }
+        .toDF("wg", "rk")
       val atRank = pre.join(broadcast(wantedDf),
           col("g") === col("wg") && col("rk") > col("c") &&
             col("rk") <= col("c") + col("cnt"))
         .select(col("g"), col("rk"), col("v"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      counts.map { case (g, n) =>
-        g -> (n, posOf(n).map { pos =>
-          val lo = atRank((g, math.floor(pos).toLong + 1))
-          val hi = atRank((g, math.ceil(pos).toLong + 1))
-          BigDecimal(java.math.BigDecimal.valueOf(
-              lo + (hi - lo) * (pos - math.floor(pos))))
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-        })
-      }
+      qs.map { case (g, q) => g -> (q.n, q.values(r => atRank((g, r)))) }
     } finally org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(cls)
   }
 

@@ -109,11 +109,11 @@ object StringSimOps {
     // key, SNM sorts the whole relation and pairs each record with its
     // next `SnmWindow` neighbors, catching near-dups whose blocking key
     // itself is dirty. The global sort position comes from
-    // [[graft.operators.GlobalRank]] (range partition + local rank +
-    // prefix offsets — NO single-partition window), the neighbor pairing
-    // is an equi-join on rank (a-side exploded to rn+1..rn+w, never a
-    // non-equi join), and the DL kernel verifies only the w·n candidate
-    // pairs — linear in the corpus.
+    // [[graft.operators.GlobalRank]] (range buckets + per-bucket prefix
+    // sums + prefix offsets — NO single-partition window), the neighbor
+    // pairing is an equi-join on rank (a-side exploded to rn+1..rn+w,
+    // never a non-equi join), and the DL kernel verifies only the w·n
+    // candidate pairs — linear in the corpus.
     "q160_sorted_neighborhood" -> ((s, d) => {
       val c = Tables(s, d, "customer")
         .select(col("c_custkey"), col("c_name"))

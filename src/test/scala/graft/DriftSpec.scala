@@ -161,7 +161,7 @@ class DriftSpec extends SparkSpec {
     // type ONE sort task at 100 TB. The shared cumulativeByValue must
     // plan the range-partitioned prefix-sum instead — no Window keyed
     // by event_type anywhere (GlobalRank's own windows run over
-    // __gp_pid buckets / bounded offset tables).
+    // __gr_pid buckets / bounded offset tables).
     val vc = twoPeriod("t", (1 to 100).map(_.toDouble),
         (1 to 100).map(_.toDouble))
       .groupBy(col("event_type"), col("value"))

@@ -94,6 +94,43 @@ class GlobalRankScaleSpec extends SparkSpec {
     assert(got.except(want).isEmpty && want.except(got).isEmpty)
   }
 
+  test("rank and prefix sum of an uncached aggregate equal the windows") {
+    // an aggregate input re-evaluates with a shuffle: the bucket totals
+    // still come from the unranked branch, so both branches must bucket
+    // every row alike
+    val agg = spark.range(0, 3000).repartition(5)
+      .groupBy((col("id") * 2654435761L % 997L).as("k"))
+      .agg(sum(col("id") % 13 + 1).as("w"))
+    val rank = GlobalRank.withRank(agg, "rn", col("k").desc)
+      .select("k", "w", "rn")
+    val wantRank = agg.withColumn("rn",
+      row_number().over(Window.orderBy(col("k").desc)).cast("long"))
+    assert(rank.count() === agg.count())
+    assert(rank.except(wantRank).isEmpty && wantRank.except(rank).isEmpty)
+    val ps = GlobalRank.withPrefixSum(agg, "ps", col("w"), col("k"))
+      .select("k", "w", "ps")
+    val wantPs = agg.withColumn("ps", coalesce(sum(col("w")).over(
+        Window.orderBy(col("k")).rowsBetween(Window.unboundedPreceding, -1)),
+      lit(0L)))
+    assert(ps.except(wantPs).isEmpty && wantPs.except(ps).isEmpty)
+  }
+
+  test("a known row count skips the count job") {
+    val df = spark.range(0, 5000)
+      .select((col("id") * 2654435761L % 1000003L).as("k"), col("id"))
+    // building the ranked plan runs the boundary sample, plus the count
+    // unless the caller passes it
+    val (countJobs, _, _) = jobsOf(df.count())
+    val (known, _, _) = jobsOf(
+      GlobalRank.withRankN(df, "rn", Some(5000L), col("k"), col("id")))
+    val (counted, _, _) = jobsOf(
+      GlobalRank.withRank(df, "rn", col("k"), col("id")))
+    assert(known === 1)
+    // the count is itself two jobs under AQE (partial-count stage, then
+    // the final aggregate)
+    assert(countJobs === 2 && counted === 1 + countJobs)
+  }
+
   test("interpreted eval agrees with codegen for SortedBoundaryBucket") {
     import spark.implicits._
     val df = (0 until 500)
