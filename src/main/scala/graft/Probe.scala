@@ -9,7 +9,7 @@ import org.apache.spark.scheduler._
   * jobs start before the entry function returns its DataFrame, `exec`
   * jobs during the noop write. The `PROBE` summary line carries every
   * rep's seconds and eager/exec job counts. `--explain` adds the
-  * formatted plan.
+  * formatted AQE final plan of the last rep's frame.
   *
   * Usage: runMain graft.Probe <sfDir> [--explain] <entry>...
   */
@@ -46,13 +46,14 @@ object Probe {
     })
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
+      var df: org.apache.spark.sql.DataFrame = null
       val reps = (1 to 3).map { r =>
         println(s"== $n rep $r ==")
         perLayer.clear()
         t0 = System.nanoTime()
         try {
           sc.setJobGroup("eager", n)
-          val df = fn(spark, sfDir)
+          df = fn(spark, sfDir)
           sc.setJobGroup("exec", n)
           df.write.format("noop").mode("overwrite").save()
         } finally sc.clearJobGroup()
@@ -66,7 +67,10 @@ object Probe {
       println(f"PROBE $n%-28s ${reps.map(r => f"${r._1}%.2f").mkString(" ")}" +
         s"  eager_jobs=${reps.map(_._2).mkString(",")}" +
         s" exec_jobs=${reps.map(_._3).mkString(",")}")
-      if (flags.contains("--explain")) fn(spark, sfDir).explain("formatted")
+      if (flags.contains("--explain")) {
+        PlanAudit.finalPlan(df)
+        df.explain("formatted")
+      }
     }
     spark.stop()
   }

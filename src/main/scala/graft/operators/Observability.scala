@@ -35,19 +35,20 @@ object Observability {
     df.observe(name, count(lit(1)).as("rows"), nullCounts: _*)
   }
 
-  private val seen = mutable.Map[String, Row]()
-  // per-SESSION registration (a lone global flag would leave every
-  // session after the first without a listener, so its observed metrics
-  // never arrive and awaitMetrics spins to timeout). Weak keys: holding
-  // a stopped session here would pin its whole runtime graph.
-  private val registered = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  // observed rows per SESSION, then per observation name: two sessions
+  // observing the same name must not overwrite each other's rows. A
+  // session's entry is its registration (a lone global flag would leave
+  // every session after the first without a listener, so its observed
+  // metrics never arrive and awaitMetrics spins to timeout). Weak keys:
+  // holding a stopped session here would pin its whole runtime graph.
+  private val seen =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, Row]]()
 
-  /** Most recent observed-metrics row for `name`, if any action has
-    * completed since. Listener registration is lazy and idempotent.
+  /** Most recent observed-metrics row for `name` in `spark`, if any
+    * action of that session has completed since.
     */
   def lastMetrics(spark: SparkSession, name: String): Option[Row] =
-    seen.synchronized { seen.get(name) }
+    seen.synchronized { Option(seen.get(spark)).flatMap(_.get(name)) }
 
   /** [[lastMetrics]] with a bounded wait: QueryExecutionListener events
     * arrive on the async listener bus, so metrics for a just-finished
@@ -68,8 +69,11 @@ object Observability {
     * Call once per session before running observed frames.
     */
   def register(spark: SparkSession): Unit = {
-    registered.synchronized {
-      if (!registered.add(spark)) return
+    val rowsOf = seen.synchronized {
+      if (seen.containsKey(spark)) return
+      val m = mutable.Map[String, Row]()
+      seen.put(spark, m)
+      m
     }
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -77,7 +81,7 @@ object Observability {
             qe: org.apache.spark.sql.execution.QueryExecution,
             durationNs: Long): Unit = {
           val rows = qe.observedMetrics
-          if (rows.nonEmpty) seen.synchronized { seen ++= rows }
+          if (rows.nonEmpty) seen.synchronized { rowsOf ++= rows }
         }
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution,

@@ -456,6 +456,8 @@ object TextAnalysis {
             lit(0.3) * (lit(1.0) - col("stop_ratio")) +
             lit(0.2) * least(col("avg_len") / 10.0, lit(1.0)))
         .filter(col("score") >= 0.5)
+      // no hint on the keeper join: one keeper per DISTINCT text shrinks
+      // with the dup rate but grows with the corpus, so AQE owns it
       val keepers = docs.groupBy(col("text").as("ktext"))
         .agg(min(col("doc_id")).as("keeper"))
       docs.join(keepers,

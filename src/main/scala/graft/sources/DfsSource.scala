@@ -223,13 +223,16 @@ case class DfsChunk(chunkId: Int, file: String) extends InputPartition
 /** WRITE side: each Spark partition becomes one chunk, partition order
   * = manifest order (the reference's chunk-per-worker WRITE,
   * `Client/client_v1.py:96-115`). Exactly-once via the standard
-  * temp-then-rename commit: tasks write to `_temp/part-<pid>-<task>`,
-  * only files named in COMMITTED task messages are renamed to their
-  * final `part-%05d` slot (a speculative/retried attempt's file is
-  * never referenced and is swept with the temp dir), so readers see
-  * each chunk exactly once. Input must carry one `value` column, binary
-  * (written verbatim) or string (a line plus `\n`); other columns are
-  * rejected up front, not silently dropped.
+  * temp-then-rename commit: tasks write to
+  * `_temp/<write>/part-<pid>-<task>`, only files named in COMMITTED task
+  * messages are renamed to their final `part-%05d` slot (a
+  * speculative/retried attempt's file is never referenced and is swept
+  * with the write's staging dir), so readers see each chunk exactly
+  * once. Each write stages in its own `_temp` subdirectory, so one
+  * write's commit or abort never sweeps another's staged chunks. Input
+  * must carry one `value` column, binary (written verbatim) or string
+  * (a line plus `\n`); other columns are rejected up front, not
+  * silently dropped.
   */
 class DfsWriteBuilder(path: String, schema: StructType)
     extends WriteBuilder with SupportsTruncate {
@@ -252,9 +255,22 @@ case class DfsCommit(partitionId: Int, tempFile: String)
 
 class DfsBatchWrite(dir: String, truncate: Boolean, lines: Boolean)
     extends BatchWrite {
+  private val staging = new Path(dir, s"_temp/${java.util.UUID.randomUUID}")
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-    : DataWriterFactory = new DfsWriterFactory(dir, lines,
+    : DataWriterFactory = new DfsWriterFactory(staging.toString, lines,
       new SerializableHadoopConf(DfsTable.sessionConf))
+
+  /** Drop this write's staging dir, then `_temp` once no write stages. */
+  private def sweep(fs: org.apache.hadoop.fs.FileSystem): Unit = {
+    fs.delete(staging, true)
+    val temp = staging.getParent
+    // a non-recursive delete refuses a dir another write staged in since
+    try {
+      if (fs.exists(temp) && fs.listStatus(temp).isEmpty)
+        fs.delete(temp, false)
+    } catch { case _: java.io.IOException => () }
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = DfsTable.sessionConf
@@ -276,21 +292,21 @@ class DfsBatchWrite(dir: String, truncate: Boolean, lines: Boolean)
         throw new java.io.IOException(
           s"graft-dfs commit: rename $temp -> $dest failed")
     }
-    fs.delete(new Path(p, "_temp"), true) // uncommitted attempts swept
+    sweep(fs) // uncommitted attempts swept
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val temp = new Path(dir, "_temp")
-    temp.getFileSystem(DfsTable.sessionConf).delete(temp, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    sweep(staging.getFileSystem(DfsTable.sessionConf))
 }
 
-/** `lines`: string rows, each written plus `\n`; else binary rows, as is. */
-class DfsWriterFactory(dir: String, lines: Boolean,
+/** Tasks write into `staging`. `lines`: string rows, each written plus
+  * `\n`; else binary rows, as is.
+  */
+class DfsWriterFactory(staging: String, lines: Boolean,
     conf: SerializableHadoopConf) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
     : DataWriter[InternalRow] = new DataWriter[InternalRow] {
-    private val temp = new Path(dir, s"_temp/part-$partitionId-$taskId")
+    private val temp = new Path(staging, s"part-$partitionId-$taskId")
     private val fs = temp.getFileSystem(conf.value)
     private val out = new java.io.BufferedOutputStream(fs.create(temp, true))
 

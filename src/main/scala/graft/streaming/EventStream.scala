@@ -72,8 +72,9 @@ object EventStream {
     * purchases within the next 10 minutes. Both sides carry watermarks
     * and the join predicate bounds event-time distance, so each side's
     * buffered state is evicted once the other side's watermark passes —
-    * state is O(rate × horizon), not unbounded. In batch mode the same
-    * plan is a plain range join (watermarks are no-ops), which is what
+    * state is O(rate × horizon), not unbounded. Neither side
+    * broadcasts. In batch mode the same plan is a plain range join
+    * (watermarks are no-ops) whose strategy AQE picks, which is what
     * the q45 oracle hash-checks; EventStreamSpec pins streaming == batch.
     */
   def clickPurchaseJoin(events: DataFrame): DataFrame = {

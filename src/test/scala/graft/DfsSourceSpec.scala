@@ -173,6 +173,29 @@ class DfsSourceSpec extends SparkSpec {
     }
   }
 
+  test("one write's commit leaves another write's staged chunks alone") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-dfs-2w").toString + "/store"
+    // writer A stages a chunk through the connector's own write path ...
+    val a = new graft.sources.DfsBatchWrite(dir, truncate = false, lines = true)
+    val task = a.createBatchWriterFactory(null).createWriter(0, 0L)
+    Seq("a-1", "a-2").foreach(v => task.write(
+      org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(v))))
+    val staged = task.commit()
+    // ... writer B writes and commits in between ...
+    Seq("b-1").toDF("value").coalesce(1)
+      .write.format("graft-dfs").mode("append").save(dir)
+    // ... and A's commit still finds its staged chunk
+    a.commit(Array(staged))
+    val got = spark.read.format("graft-dfs").load(dir)
+      .orderBy(col("chunk_id"), col("line_no"))
+      .select("value").collect().map(_.getString(0)).toSeq
+    assert(got == Seq("b-1", "a-1", "a-2"))
+    assert(!Files.exists(Paths.get(dir, "_temp")),
+      "the last commit removes the emptied staging root")
+  }
+
   test("binary rows are written verbatim; reads keep value: string") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-dfs-bin").toString + "/store"

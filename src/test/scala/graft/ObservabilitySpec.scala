@@ -24,6 +24,22 @@ class ObservabilitySpec extends SparkSpec {
     assert(m.getAs[Long]("nulls_v") == 2L)
   }
 
+  test("observed metrics are kept per session") {
+    val other = spark.newSession()
+    def observe(s: org.apache.spark.sql.SparkSession, n: Int): Long = {
+      Observability.register(s)
+      Observability.withRowAccounting(s.range(n).toDF(), "per_session", Nil)
+        .count()
+    }
+    def rows(s: org.apache.spark.sql.SparkSession): Long =
+      Observability.awaitMetrics(s, "per_session").get.getAs[Long]("rows")
+    assert(observe(spark, 3) == 3)
+    assert(rows(spark) == 3L)
+    assert(observe(other, 5) == 5)
+    assert(rows(other) == 5L, "the other session reads its own row")
+    assert(rows(spark) == 3L, "a second session must not overwrite the first")
+  }
+
   test("stream health reports per-batch rows and bounded state") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Timestamp, String, Double)]

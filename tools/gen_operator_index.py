@@ -30,12 +30,11 @@ def newest_correctness():
 def defining_files(names):
     """entry name -> repo-relative file defining its `"name" ->` binding."""
     out = {}
-    # PlanDump/PlanAudit/SparkEntry hold per-entry REFERENCE maps
-    # (explanations, allowlists, rows-only provenance), not definitions
+    # PlanAudit/SparkEntry hold per-entry REFERENCE maps (plan
+    # predicates, rows-only provenance), not definitions
     grep = subprocess.run(
         ["grep", "-rn", "-e", '" ->', "--include=*.scala",
-         "--exclude=PlanDump.scala", "--exclude=PlanAudit.scala",
-         "--exclude=SparkEntry.scala",
+         "--exclude=PlanAudit.scala", "--exclude=SparkEntry.scala",
          os.path.join(ROOT, "src/main/scala")],
         capture_output=True, text=True).stdout
     pat = re.compile(r'^([^:]+):\d+:\s*"([A-Za-z0-9_]+)" ->')

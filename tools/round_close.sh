@@ -10,7 +10,7 @@ set -euo pipefail
 SF01=${SF01:-/root/testdata/sf0.01}
 SF1=${SF1:-/root/testdata/sf0.1}
 
-echo "== 1/6 plan audit (gates on unexplained cartesian/BNLJ) =="
+echo "== 1/6 plan audit (gates on each entry's plan predicates, cartesian/BNLJ included) =="
 sbt -batch "runMain graft.PlanAudit"
 
 echo "== 2/6 correctness at $SF01 =="
