@@ -43,7 +43,7 @@ object StreamSmoke {
     }
     def fileStream(dir: String): DataFrame =
       Tables.normalize(spark.readStream
-        .schema(spark.read.parquet(dir).schema)
+        .schema(Tables.parquetSchema(spark, dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(dir))
 

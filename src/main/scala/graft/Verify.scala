@@ -22,7 +22,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         if (!SparkEntry.oracleSql.contains(name)) {
-          val rows = spark.read.parquet(s"$outDir/$name").count()
+          val rows = Tables.readFlat(spark, s"$outDir/$name").count()
           val specName = SparkEntry.rowsOnlyProvenance.getOrElse(name, {
             System.err.println(
               s"[verify] WARN rows-only entry $name has no provenance")

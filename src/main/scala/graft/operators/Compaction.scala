@@ -48,6 +48,9 @@ object Compaction {
         n += 1; bytes += f.getLen
       }
     }
+    // `dir` is a user's layout, possibly partitioned (the listing above
+    // recurses), so Spark infers its schema; Tables.parquetSchema reads
+    // flat engine layouts only
     (n, bytes, spark.read.parquet(dir).count())
   }
 
@@ -61,7 +64,7 @@ object Compaction {
       targetBytes: Long, clusterBy: Seq[String] = Nil): DataFrame = {
     val (inFiles, inBytes, inRows) = stats(spark, inDir)
     val nOut = math.max(1L, (inBytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(inDir)
+    val df = spark.read.parquet(inDir) // user layout: see stats
     val packed =
       if (clusterBy.nonEmpty)
         df.repartitionByRange(nOut, clusterBy.map(col): _*)

@@ -120,7 +120,7 @@ object ResultCache {
           .foreach(s => f.delete(s.getPath, true))
     if (f.exists(marker)) {
       sweepStrays()
-      (spark.read.parquet(dataDir.toString), true)
+      (graft.Tables.readFlat(spark, dataDir.toString), true)
     } else {
       // Write-then-claim: stage under a unique temp dir, then rename into
       // place. With an existing destination, rename (local FS and HDFS
@@ -140,7 +140,7 @@ object ResultCache {
       f.mkdirs(marker.getParent)
       try { f.create(marker, false).close() }
       catch { case _: java.io.IOException => () } // racer won; same bytes
-      (spark.read.parquet(dataDir.toString), false)
+      (graft.Tables.readFlat(spark, dataDir.toString), false)
     }
   }
 }

@@ -198,7 +198,7 @@ object VersionedTable {
     require(fulls.nonEmpty, s"version $v has no full base under $root")
     val base = fulls.last._1
     def dataOf(mv: Long) =
-      spark.read.parquet(new Path(root, s"data/v=$mv").toString)
+      graft.Tables.readFlat(spark, new Path(root, s"data/v=$mv").toString)
     val frags = meta.collect {
       case (mv, true) if mv > base && mv <= v => (mv, dataOf(mv))
     }

@@ -114,6 +114,8 @@ object MvRewrite extends Rule[LogicalPlan] {
       // filters may only touch key columns — on the MV they prune the
       // same groups they would have pruned on the fact table
       if filters.forall(_.references.forall(a => keys.contains(a.name)))
+      // the MV path comes from the user's conf and may be partitioned, so
+      // Spark infers its schema (Tables.parquetSchema reads flat layouts)
       mvPlan <- Some(
         SparkSession.active.read.parquet(tgt).queryExecution.analyzed)
       mvAttr <- Some(mvPlan.output.map(a => a.name -> a).toMap)

@@ -153,8 +153,8 @@ object EventQueries {
       iso.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
-      val raw = iso.read.parquet(s"$d/lineitem.parquet")
-      val moves = iso.readStream.schema(raw.schema)
+      val raw = graft.Tables.parquetSchema(iso, s"$d/lineitem.parquet")
+      val moves = iso.readStream.schema(raw)
         .option("pathGlobFilter", "lineitem.parquet").parquet(d)
         .select(col("l_suppkey").cast("long"),
           unix_micros(col("l_shipdate")),

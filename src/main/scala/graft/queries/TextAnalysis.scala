@@ -101,13 +101,17 @@ object TextAnalysis {
     * whole vocabulary, exactly the coarse-group hazard the GlobalRank
     * scaladoc names (the oracle keeps the window form — DuckDB-side
     * only). The K-sweep then needs no second pass: each threshold is a
-    * conditional sum in ONE aggregation over the ranked vocab.
+    * conditional sum in ONE aggregation over the ranked vocab. The
+    * vocabulary is localCheckpoint'ed for this call before it is ranked:
+    * the rank reads its input for a count, a sample and two branches,
+    * and would tokenize the corpus again for each.
     */
   def vocabCoverage(docs: DataFrame,
       ks: Seq[Long] = Seq(256L, 1024L, 4096L, 16384L)): DataFrame = {
     val vocab = docs.select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+      .localCheckpoint(true)
     val ranked = graft.operators.GlobalRank.withRank(vocab, "rnk",
       col("freq").desc, col("w"))
     val agg = ranked.agg(sum(col("freq")).as("tot"),

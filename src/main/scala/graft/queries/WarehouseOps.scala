@@ -529,7 +529,9 @@ object WarehouseOps {
         val iso = s0.newSession()
         val root = Files.createTempDirectory("graft_mvrw").toString
         val fact = s"$d/lineitem.parquet"
-        iso.read.parquet(fact)
+        // the raw fact path (not Tables()): the rule matches the scan by
+        // path
+        graft.Tables.readFlat(iso, fact)
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("cnt"),
             sum(col("l_quantity")).as("sum_l_quantity"),
@@ -539,7 +541,7 @@ object WarehouseOps {
         iso.conf.set(rule.SourceKey, fact)
         iso.conf.set(rule.TargetKey, s"$root/mv")
         iso.conf.set(rule.KeysKey, "l_returnflag,l_linestatus")
-        val out = iso.read.parquet(fact)
+        val out = graft.Tables.readFlat(iso, fact)
           .filter(col("l_linestatus") === "F")
           .groupBy(col("l_returnflag"))
           .agg(count(lit(1)).as("n"),

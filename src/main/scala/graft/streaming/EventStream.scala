@@ -428,14 +428,15 @@ object EventStream {
 
   /** readStream twin of Tables(): parquet source with the RAW on-disk
     * schema (streaming needs it explicit), then the same ts
-    * normalization the batch loader applies.
+    * normalization the batch loader applies. The raw schema is one
+    * driver footer read (`Tables.parquetSchema`), not a batch read.
     */
   def readEventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables.parquetSchema(spark, s"$sfDir/events.parquet")
     // the file-stream source monitors a DIRECTORY; select just the events
     // table from the sf dir via glob filter
     graft.Tables.normalize(
-      spark.readStream.schema(raw.schema)
+      spark.readStream.schema(raw)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sfDir))
   }
